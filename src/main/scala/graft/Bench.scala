@@ -92,7 +92,10 @@ object Bench {
     // Warm the file listing / parquet reader / codegen paths once per table
     // so per-query numbers measure the query, not first-touch JVM costs.
     Tables.names.foreach { t =>
-      try Tables.load(spark, sfDir, t).count() catch { case _: Throwable => }
+      try Tables.load(spark, sfDir, t).count()
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] warm-up load of $t failed: $e")
+      }
     }
     // Optional comma-separated query filter for local iteration; the driver
     // never sets it, so its runs always cover the full suite.

@@ -1995,7 +1995,7 @@ object SparkEntry {
       // r19 (guide §1.2): the per-doc size aggregate is ALSO shared —
       // it used to be derived once per path (5 subtree instances across
       // the two paths' joins); it is doc-count-sized, checkpoint once
-      val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
+      val sizes = Dedup.shingleSizes(sh, "doc_id")
       // r19 (guide §1.2/§2.4, measured): ONE (id_a, id_b, n_inter)
       // relation feeds the exact path AND the prefix path's verify.
       // The prefix verify used to re-derive each candidate's count by

@@ -176,19 +176,29 @@ object Dedup {
       distinct: Boolean = true): DataFrame = {
     val exploded = shingleRows(df, idCol, textCol, n)
     val base = if (distinct) exploded.distinct() else exploded
-    if (maxShingleDocFreq <= 0) base
-    else {
-      // document frequency, not occurrence count: dedup (id, shingle) first
-      // so the count is df and — unlike countDistinct over the multiset —
-      // both the dedup and the count get map-side partial aggregation
-      val distinctPairs = if (distinct) base else exploded.distinct()
-      val hot = distinctPairs.groupBy(col("shingle"))
-        .agg(count(lit(1)).as("df_"))
-        .filter(col("df_") > maxShingleDocFreq)
-        .select("shingle")
-      base.join(hot, Seq("shingle"), "left_anti")
-    }
+    // document frequency, not occurrence count: dedup (id, shingle) first
+    // so the count is df and — unlike countDistinct over the multiset —
+    // both the dedup and the count get map-side partial aggregation
+    withoutHotShingles(base,
+      if (distinct) base else exploded.distinct(),
+      maxShingleDocFreq)
   }
+
+  /** (shingle, df_) document frequencies of a distinct posting relation. */
+  private def shingleDocFreq(sh: DataFrame): DataFrame =
+    sh.groupBy(col("shingle")).agg(count(lit(1)).as("df_"))
+
+  /** `rows` minus every shingle whose df over the distinct `postings`
+    * exceeds `maxShingleDocFreq` (≤ 0 = no cap). */
+  private def withoutHotShingles(
+      rows: DataFrame,
+      postings: DataFrame,
+      maxShingleDocFreq: Long): DataFrame =
+    if (maxShingleDocFreq <= 0) rows
+    else rows.join(
+      shingleDocFreq(postings).filter(col("df_") > maxShingleDocFreq)
+        .select("shingle"),
+      Seq("shingle"), "left_anti")
 
   /** All pairs (a < b) with shingle-set Jaccard >= `threshold`:
     * intersection counts from the shingle postings, then
@@ -196,14 +206,9 @@ object Dedup {
     *
     * Scale notes: shingles are 64-bit-hashed before any shuffle (strings
     * never cross the wire) and `maxShingleDocFreq` bounds the k-squared
-    * pair blowup on hot shingles. Two pair-generation branches (r18):
-    * capped postings (`maxShingleDocFreq > 0`) take the grouped
-    * generator ([[pairIntersectionsGrouped]] — one exchange + one hash
-    * aggregation, group state bounded by the cap); uncapped postings
-    * keep the inverted-index self-join, whose k² stream never builds a
-    * per-group array an uncapped hot shingle could blow up (there AQE's
-    * ReusedExchange shares the explode+distinct subtree across the join
-    * sides). A prefix-filtered
+    * pair blowup on hot shingles. The counts come from
+    * [[shingleIntersections]]: grouped generator when capped, posting
+    * self-join when not. A prefix-filtered
     * variant (rarest-k shingle candidate join + exact verify, Bayardo '07)
     * was measured here and LOST at every tested scale: the extra doc-freq
     * join, per-doc rank window, and verify join cost more than the
@@ -221,43 +226,85 @@ object Dedup {
       n: Int,
       threshold: Double,
       maxShingleDocFreq: Long = 0L): DataFrame = {
-    val hashed = shingleRows(df, idCol, textCol, n)
-      .select(col(idCol), xxhash64(col("shingle")).as("shingle"))
-      .distinct()
-    val sh =
-      if (maxShingleDocFreq <= 0) hashed
-      else {
-        val hot = hashed.groupBy(col("shingle"))
-          .agg(count(lit(1)).as("df_"))
-          .filter(col("df_") > maxShingleDocFreq)
-          .select("shingle")
-        hashed.join(hot, Seq("shingle"), "left_anti")
-      }
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
-    // r18: capped postings take the grouped pair generator (see
-    // [[pairIntersectionsGrouped]] — one exchange, no merge-join sorts);
-    // the uncapped form keeps the self-join, whose k² stream never
-    // builds a per-group array an uncapped hot shingle could blow up
-    val inter =
-      if (maxShingleDocFreq > 0) pairIntersectionsGrouped(sh, idCol)
-      else {
-        val a = sh.select(col(idCol).as("id_a"), col("shingle"))
-        val b = sh.select(col(idCol).as("id_b"), col("shingle"))
-        a.join(b, Seq("shingle"))
-          .filter(col("id_a") < col("id_b"))
-          .groupBy(col("id_a"), col("id_b"))
-          .agg(count(lit(1)).as("n_inter"))
-      }
-    inter
-      .join(sizes.select(col(idCol).as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col(idCol).as("id_b"), col("sz").as("sz_b")), "id_b")
-      .withColumn("jaccard",
-        col("n_inter").cast("double") /
-          (col("sz_a") + col("sz_b") - col("n_inter")).cast("double"))
+    val sh = cappedShingleHashes(df, idCol, textCol, n, maxShingleDocFreq)
+    withPairSizes(
+      shingleIntersections(sh, idCol, grouped = maxShingleDocFreq > 0),
+      shingleSizes(sh, idCol), idCol)
+      .withColumn("jaccard", jaccardOf)
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("n_inter"), col("sz_a"),
         col("sz_b"), col("jaccard"))
   }
+
+  /** Exact Jaccard of a pair row carrying (n_inter, sz_a, sz_b). */
+  private val jaccardOf: Column =
+    col("n_inter").cast("double") /
+      (col("sz_a") + col("sz_b") - col("n_inter")).cast("double")
+
+  /** The blocked self-join every pair generator here shares: rows of
+    * `keyed` that agree on every `key` column pair up, each unordered
+    * pair once per shared key (`id_a < id_b`, so no self pairs and no
+    * mirror rows). Returns `id_a`, `id_b` and each `payload` column as
+    * `<name>_a` / `<name>_b`. A null key never pairs (inner equi-join).
+    * A pair sharing k keys is emitted k times — callers whose relation
+    * gives one id several keys (bands, probes, shingles) either count
+    * that multiplicity or `.distinct()` it away. */
+  private[graft] def blockedPairs(
+      keyed: DataFrame,
+      idCol: String,
+      key: Seq[String],
+      payload: Seq[String]): DataFrame = {
+    def side(s: String): DataFrame = keyed.select(
+      (col(idCol).as(s"id_$s") +: key.map(col)) ++
+        payload.map(p => col(p).as(s"${p}_$s")): _*)
+    side("a").join(side("b"), key)
+      .filter(col("id_a") < col("id_b"))
+      .select((Seq("id_a", "id_b") ++
+        payload.flatMap(p => Seq(s"${p}_a", s"${p}_b"))).map(col): _*)
+  }
+
+  /** (id_a < id_b, n_inter) shared-shingle counts of a posting relation
+    * (idCol, shingle). r18: df-capped postings (`grouped`) take
+    * [[pairIntersectionsGrouped]] — one exchange + one hash aggregation,
+    * no merge-join sorts; uncapped postings keep the inverted-index
+    * self-join, whose k² stream never builds a per-group array an
+    * uncapped hot shingle could blow up (there AQE's ReusedExchange
+    * shares the posting subtree across the join sides). */
+  private[graft] def shingleIntersections(
+      sh: DataFrame,
+      idCol: String,
+      grouped: Boolean): DataFrame =
+    if (grouped) pairIntersectionsGrouped(sh, idCol)
+    else blockedPairs(sh, idCol, Seq("shingle"), Nil)
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(count(lit(1)).as("n_inter"))
+
+  /** (id_a, id_b, n_inter) of candidate pairs that do not count shared
+    * shingles themselves (LSH bands, the prefix filter), re-derived from
+    * both sides' postings; pairs sharing nothing are absent. */
+  private def candidateIntersections(
+      cand: DataFrame,
+      sh: DataFrame,
+      idCol: String): DataFrame =
+    cand
+      .join(sh.select(col(idCol).as("id_a"), col("shingle")), "id_a")
+      .join(sh.select(col(idCol).as("id_b"), col("shingle")),
+        Seq("id_b", "shingle"))
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(count(lit(1)).as("n_inter"))
+
+  /** Per-doc shingle-set size `(idCol, sz)` of a posting relation. */
+  private[graft] def shingleSizes(sh: DataFrame, idCol: String): DataFrame =
+    sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
+
+  /** `pairs` with each side's set size joined on as `sz_a` / `sz_b`. */
+  private def withPairSizes(
+      pairs: DataFrame,
+      sizes: DataFrame,
+      idCol: String): DataFrame =
+    pairs
+      .join(sizes.select(col(idCol).as("id_a"), col("sz").as("sz_a")), "id_a")
+      .join(sizes.select(col(idCol).as("id_b"), col("sz").as("sz_b")), "id_b")
 
   /** All pairs (a < b) whose shingle-set CONTAINMENT
     * `max(|A∩B|/|A|, |A∩B|/|B|)` meets `threshold` — Broder '97's second
@@ -270,12 +317,16 @@ object Dedup {
     *
     * Identical inverted-index shape and cost to [[ngramJaccardPairs]]:
     * shingles are 64-bit-hashed before any exchange (strings never cross
-    * the wire), `maxShingleDocFreq` caps the k² self-join blowup on hot
-    * shingles, AQE's ReusedExchange shares the explode+distinct subtree
-    * across the join sides, and the pair aggregation is map-side
-    * combinable on (id_a, id_b). Containment needs no extra pass — both
-    * directed ratios derive from the same (n_inter, sz_a, sz_b) triple
-    * the Jaccard plan already carries.
+    * the wire), and the (id_a, id_b, n_inter) counts come from the shared
+    * [[shingleIntersections]]. Its two branches follow the cap: with
+    * `maxShingleDocFreq > 0` the capped postings go through the grouped
+    * generator ([[pairIntersectionsGrouped]] — one exchange + one hash
+    * aggregation, group state bounded by the cap); uncapped postings keep
+    * the posting self-join ([[blockedPairs]]), where AQE's ReusedExchange
+    * shares the explode+distinct subtree across the join sides and the
+    * pair count is map-side combinable on (id_a, id_b). Containment needs
+    * no extra pass — both directed ratios derive from the same
+    * (n_inter, sz_a, sz_b) triple the Jaccard plan already carries.
     *
     * Output: `id_a`, `id_b`, `n_inter`, `sz_a`, `sz_b`, `cont_a`
     * (= n_inter/sz_a), `cont_b` (both rounded 6dp). */
@@ -332,55 +383,43 @@ object Dedup {
     val hashed = shingleRows(df, idCol, textCol, n)
       .select(col(idCol), xxhash64(col("shingle")).as("shingle"))
       .distinct()
-    if (maxShingleDocFreq <= 0) hashed
-    else {
-      val hot = hashed.groupBy(col("shingle"))
-        .agg(count(lit(1)).as("df_"))
-        .filter(col("df_") > maxShingleDocFreq)
-        .select("shingle")
-      hashed.join(hot, Seq("shingle"), "left_anti")
-    }
+    withoutHotShingles(hashed, hashed, maxShingleDocFreq)
   }
 
   /** Exact inverted-index containment core over a prepared shingle
     * relation — see [[containmentPairs]] for the operator contract.
-    * `grouped = true` (callers whose `sh` is df-capped) routes the
-    * intersection counts through [[pairIntersectionsGrouped]]; uncapped
-    * callers keep the self-join (bounded-state note there). */
+    * `grouped = true` (callers whose `sh` is df-capped) takes the grouped
+    * branch of [[shingleIntersections]]. */
   private[graft] def containmentFromShingles(
       sh: DataFrame,
       idCol: String,
       threshold: Double,
       grouped: Boolean = false,
       sharedSizes: Option[DataFrame] = None,
-      sharedInter: Option[DataFrame] = None): DataFrame = {
+      sharedInter: Option[DataFrame] = None): DataFrame =
     // callers running BOTH containment paths over one shingle relation
     // (q146's dispatch audit) pass the per-doc size aggregate — and the
     // (id_a, id_b, n_inter) intersection relation — in so each is
     // derived once, not once per path (r19, guide §1.2)
-    val sizes = sharedSizes.getOrElse(
-      sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz")))
-    val inter = sharedInter.getOrElse {
-      if (grouped) pairIntersectionsGrouped(sh, idCol)
-      else {
-        val a = sh.select(col(idCol).as("id_a"), col("shingle"))
-        val b = sh.select(col(idCol).as("id_b"), col("shingle"))
-        a.join(b, Seq("shingle"))
-          .filter(col("id_a") < col("id_b"))
-          .groupBy(col("id_a"), col("id_b"))
-          .agg(count(lit(1)).as("n_inter"))
-      }
-    }
-    inter
-      .join(sizes.select(col(idCol).as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col(idCol).as("id_b"), col("sz").as("sz_b")), "id_b")
+    containmentOf(
+      sharedInter.getOrElse(shingleIntersections(sh, idCol, grouped)),
+      sharedSizes.getOrElse(shingleSizes(sh, idCol)), idCol, threshold)
+
+  /** The containment verify both containment paths end in: sizes
+    * joined onto (id_a, id_b, n_inter), both directed ratios, the
+    * `max ≥ threshold` filter, 6dp output. */
+  private def containmentOf(
+      inter: DataFrame,
+      sizes: DataFrame,
+      idCol: String,
+      threshold: Double): DataFrame =
+    withPairSizes(inter, sizes, idCol)
       .withColumn("cont_a", col("n_inter").cast("double") / col("sz_a").cast("double"))
       .withColumn("cont_b", col("n_inter").cast("double") / col("sz_b").cast("double"))
       .filter(greatest(col("cont_a"), col("cont_b")) >= threshold)
       .select(col("id_a"), col("id_b"), col("n_inter"), col("sz_a"),
         col("sz_b"), round(col("cont_a"), 6).as("cont_a"),
         round(col("cont_b"), 6).as("cont_b"))
-  }
 
   /** [[containmentPairs]] on the PREFIX-FILTERED scale path (Bayardo '07;
     * Chaudhuri's SSJoin family) — the adversarial-density dial for
@@ -428,9 +467,8 @@ object Dedup {
       sharedSizes: Option[DataFrame] = None,
       sharedInter: Option[DataFrame] = None): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
-    val sizes = sharedSizes.getOrElse(
-      sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz")))
-    val dfreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df_"))
+    val sizes = sharedSizes.getOrElse(shingleSizes(sh, idCol))
+    val dfreq = shingleDocFreq(sh)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol)).orderBy(col("df_"), col("shingle"))
     // the pigeonhole needs prefix ≥ sz − ⌈t·sz⌉ + 1, but FLOAT ceil can
@@ -467,22 +505,9 @@ object Dedup {
     // to avoid, so sharing only pays when the exact path runs anyway.
     val inter = sharedInter match {
       case Some(ia) => cand.join(ia, Seq("id_a", "id_b"))
-      case None => cand
-        .join(sh.select(col(idCol).as("id_a"), col("shingle")), "id_a")
-        .join(sh.select(col(idCol).as("id_b"), col("shingle")),
-          Seq("id_b", "shingle"))
-        .groupBy(col("id_a"), col("id_b"))
-        .agg(count(lit(1)).as("n_inter"))
+      case None => candidateIntersections(cand, sh, idCol)
     }
-    inter
-      .join(sizes.select(col(idCol).as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col(idCol).as("id_b"), col("sz").as("sz_b")), "id_b")
-      .withColumn("cont_a", col("n_inter").cast("double") / col("sz_a").cast("double"))
-      .withColumn("cont_b", col("n_inter").cast("double") / col("sz_b").cast("double"))
-      .filter(greatest(col("cont_a"), col("cont_b")) >= threshold)
-      .select(col("id_a"), col("id_b"), col("n_inter"), col("sz_a"),
-        col("sz_b"), round(col("cont_a"), 6).as("cont_a"),
-        round(col("cont_b"), 6).as("cont_b"))
+    containmentOf(inter, sizes, idCol, threshold)
   }
 
   /** Shingle document-frequency CONCENTRATION of a prepared (id, shingle)
@@ -496,7 +521,7 @@ object Dedup {
     * This is the inverse-participation-ratio family of skew statistics;
     * it is also exactly 1 + CV² of the df distribution. */
   def shingleDfConcentration(sh: DataFrame): Double = {
-    val r = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df_"))
+    val r = shingleDocFreq(sh)
       .agg(sum(col("df_")).as("s1"), sum(col("df_") * col("df_")).as("s2"),
         count(lit(1)).as("m"))
       .head()
@@ -591,10 +616,8 @@ object Dedup {
       n: Int,
       maxShingleDocFreq: Long): DataFrame = {
     require(maxShingleDocFreq > 0, "report is about a positive cap")
-    val sh = shingleRows(df, idCol, textCol, n)
-      .select(col(idCol), xxhash64(col("shingle")).as("shingle"))
-      .distinct()
-    val dfreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df_"))
+    val sh = cappedShingleHashes(df, idCol, textCol, n, maxShingleDocFreq = 0L)
+    val dfreq = shingleDocFreq(sh)
     val shingleStats = dfreq.agg(
       count(lit(1)).as("n_shingles"),
       count_if(col("df_") > maxShingleDocFreq).as("n_shingles_dropped"),
@@ -762,13 +785,25 @@ object Dedup {
   private def bandedKeys(sig: DataFrame, idCol: String,
       numHashes: Int, rowsPerBand: Int): DataFrame = {
     val nBands = numHashes / rowsPerBand
-    val bandKeys = (0 until nBands).map { bnd =>
+    bandRows(sig, Seq(idCol), (0 until nBands).map { bnd =>
       val cols = (0 until rowsPerBand).map(r => col(s"mh${bnd * rowsPerBand + r}"))
-      struct(lit(bnd).as("band"),
-        md5(concat_ws("|", cols: _*)).as("key"))
+      md5(concat_ws("|", cols: _*))
+    })
+  }
+
+  /** `carry` columns of `sig` plus one (band, key) row per entry of
+    * `keys`, band = the entry's index: the blocking relation the banded
+    * pair generators self-join on (band, key). */
+  private def bandRows(
+      sig: DataFrame,
+      carry: Seq[String],
+      keys: Seq[Column]): DataFrame = {
+    val bk = keys.zipWithIndex.map { case (k, b) =>
+      struct(lit(b).as("band"), k.as("key"))
     }
-    sig.select(col(idCol), explode(array(bandKeys: _*)).as("bk"))
-      .select(col(idCol), col("bk.band").as("band"), col("bk.key").as("key"))
+    sig.select(carry.map(col) :+ explode(array(bk: _*)).as("bk"): _*)
+      .select(carry.map(col) ++
+        Seq(col("bk.band").as("band"), col("bk.key").as("key")): _*)
   }
 
   /** Incremental NEAR-dup detection: LSH-match a new delta shard against a
@@ -887,14 +922,16 @@ object Dedup {
     // price for iterative/self-join reuse.
     val sig = minhashSignatures(df, idCol, textCol, n, numHashes)
       .transform(Checkpoints.trackedEager)
-    val banded = bandedKeys(sig, idCol, numHashes, rowsPerBand)
-    val l = banded.select(col(idCol).as("id_a"), col("band"), col("key"))
-    val r = banded.select(col(idCol).as("id_b"), col("band"), col("key"))
-    l.join(r, Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
+    bandCandidates(sig, idCol, numHashes, rowsPerBand)
   }
+
+  /** Distinct (id_a < id_b) pairs colliding on any full signature band —
+    * a pair sharing several bands is one candidate. */
+  private def bandCandidates(sig: DataFrame, idCol: String,
+      numHashes: Int, rowsPerBand: Int): DataFrame =
+    blockedPairs(bandedKeys(sig, idCol, numHashes, rowsPerBand), idCol,
+      Seq("band", "key"), Nil)
+      .distinct()
 
   /** MinHash-LSH near-dup pairs with exact Jaccard verification of the
     * LSH candidates (candidates ≪ all-pairs, so the verify join is cheap).
@@ -914,21 +951,24 @@ object Dedup {
     // sh feeds three consumers (the id_a probe, the id_b probe, and sizes);
     // uncut, the explode+distinct subtree evaluates once per consumer.
     val sh = shingleSet(df, idCol, textCol, n).transform(Checkpoints.trackedEager)
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
-    val inter = cand
-      .join(sh.select(col(idCol).as("id_a"), col("shingle")), "id_a")
-      .join(sh.select(col(idCol).as("id_b"), col("shingle")), Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_inter"))
-    cand.join(inter, Seq("id_a", "id_b"), "left_outer")
-      .na.fill(0L, Seq("n_inter"))
-      .join(sizes.select(col(idCol).as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col(idCol).as("id_b"), col("sz").as("sz_b")), "id_b")
-      .withColumn("jaccard",
-        col("n_inter").cast("double") /
-          (col("sz_a") + col("sz_b") - col("n_inter")).cast("double"))
+    candidateOverlap(cand, sh, idCol)
+      .withColumn("jaccard", jaccardOf)
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
+
+  /** Candidate pairs `cand` with their exact (n_inter, sz_a, sz_b) from
+    * the shingle relation; a candidate sharing no shingle keeps
+    * n_inter = 0. */
+  private def candidateOverlap(
+      cand: DataFrame,
+      sh: DataFrame,
+      idCol: String): DataFrame =
+    withPairSizes(
+      cand.join(candidateIntersections(cand.select("id_a", "id_b"), sh, idCol),
+        Seq("id_a", "id_b"), "left_outer")
+        .na.fill(0L, Seq("n_inter")),
+      shingleSizes(sh, idCol), idCol)
 
   /** Estimator-calibration audit: for every LSH candidate pair, the
     * Broder '97 signature estimate (matching components / numHashes)
@@ -955,12 +995,7 @@ object Dedup {
       rowsPerBand: Int): DataFrame = {
     val sig = minhashSignatures(df, idCol, textCol, n, numHashes)
       .transform(Checkpoints.trackedEager)
-    val banded = bandedKeys(sig, idCol, numHashes, rowsPerBand)
-    val cand = banded.select(col(idCol).as("id_a"), col("band"), col("key"))
-      .join(banded.select(col(idCol).as("id_b"), col("band"), col("key")),
-        Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    val cand = bandCandidates(sig, idCol, numHashes, rowsPerBand)
     val a = sig.select(col(idCol).as("id_a") +:
       (0 until numHashes).map(i => col(s"mh$i").as(s"__a$i")): _*)
     val b = sig.select(col(idCol).as("id_b") +:
@@ -971,19 +1006,9 @@ object Dedup {
     val est = cand.join(a, "id_a").join(b, "id_b")
       .select(col("id_a"), col("id_b"), nMatch.as("n_match"))
     val sh = shingleSet(df, idCol, textCol, n).transform(Checkpoints.trackedEager)
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
-    val inter = est.select("id_a", "id_b")
-      .join(sh.select(col(idCol).as("id_a"), col("shingle")), "id_a")
-      .join(sh.select(col(idCol).as("id_b"), col("shingle")),
-        Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_inter"))
     val estR = round(col("n_match").cast("double") / numHashes, 6)
-    val jacR = round(col("n_inter").cast("double") /
-      (col("sz_a") + col("sz_b") - col("n_inter")).cast("double"), 6)
-    est.join(inter, Seq("id_a", "id_b"), "left_outer")
-      .na.fill(0L, Seq("n_inter"))
-      .join(sizes.select(col(idCol).as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col(idCol).as("id_b"), col("sz").as("sz_b")), "id_b")
+    val jacR = round(jaccardOf, 6)
+    candidateOverlap(est, sh, idCol)
       .select(col("id_a"), col("id_b"), col("n_match"),
         estR.as("est_jaccard"), jacR.as("jaccard"),
         round(estR - jacR, 6).as("err"))
@@ -1242,23 +1267,9 @@ object Dedup {
       else concat(substring(col("simhash"), 1, bnd * 4),
         substring(col("simhash"), bnd * 4 + 5, 12 - bnd * 4))
     val keys = for { bnd <- 0 until 4; sub <- 0 until 4 } yield
-      struct(lit(bnd * 4 + sub).as("band"),
-        concat(substring(col("simhash"), bnd * 4 + 1, 4),
-          substring(rest(bnd), sub * 3 + 1, 3)).as("key"))
-    val banded = sig.select(col(idCol), col("simhash"),
-      explode(array(keys: _*)).as("bk"))
-      .select(col(idCol), col("simhash"), col("bk.band").as("band"),
-        col("bk.key").as("key"))
-    val l = banded.select(col(idCol).as("id_a"), col("simhash").as("sh_a"),
-      col("band"), col("key"))
-    val r = banded.select(col(idCol).as("id_b"), col("simhash").as("sh_b"),
-      col("band"), col("key"))
-    l.join(r, Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        simhashHamming(col("sh_a"), col("sh_b")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxDist)
+      concat(substring(col("simhash"), bnd * 4 + 1, 4),
+        substring(rest(bnd), sub * 3 + 1, 3))
+    hammingPairs(sig, idCol, keys, maxDist)
   }
 
   /** SimHash near-dup pairs via Manku '07 COMBINATION blocking — the
@@ -1299,27 +1310,29 @@ object Dedup {
     val triples = for {
       i <- 0 until 6; j <- i + 1 until 6; k <- j + 1 until 6
     } yield (i, j, k)
-    val keys = triples.zipWithIndex.map { case ((i, j, k), t) =>
-      struct(lit(t).as("band"),
-        concat(Seq(i, j, k).map { b =>
-          substring(col("simhash"), blocks(b)._1, blocks(b)._2)
-        }: _*).as("key"))
+    val keys = triples.map { case (i, j, k) =>
+      concat(Seq(i, j, k).map { b =>
+        substring(col("simhash"), blocks(b)._1, blocks(b)._2)
+      }: _*)
     }
-    val banded = sig.select(col(idCol), col("simhash"),
-      explode(array(keys: _*)).as("bk"))
-      .select(col(idCol), col("simhash"), col("bk.band").as("band"),
-        col("bk.key").as("key"))
-    val l = banded.select(col(idCol).as("id_a"), col("simhash").as("sh_a"),
-      col("band"), col("key"))
-    val r = banded.select(col(idCol).as("id_b"), col("simhash").as("sh_b"),
-      col("band"), col("key"))
-    l.join(r, Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
+    hammingPairs(sig, idCol, keys, maxDist)
+  }
+
+  /** The exact-blocking Hamming tail both SimHash schemes share: each
+    * (idCol, simhash) row explodes to one (band, key) row per entry of
+    * `keys` (band = its index), rows pair up on a shared (band, key), and
+    * each distinct pair is verified at Hamming ≤ `maxDist`. */
+  private def hammingPairs(
+      sig: DataFrame,
+      idCol: String,
+      keys: Seq[Column],
+      maxDist: Int): DataFrame =
+    blockedPairs(bandRows(sig, Seq(idCol, "simhash"), keys), idCol,
+      Seq("band", "key"), Seq("simhash"))
       .select(col("id_a"), col("id_b"),
-        simhashHamming(col("sh_a"), col("sh_b")).as("hamming"))
+        simhashHamming(col("simhash_a"), col("simhash_b")).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxDist)
-  }
 
   /** Exact repeated-span EXCISION (the Lee et al. '21 "Deduplicating
     * Training Data" family): instead of detecting duplicate documents,

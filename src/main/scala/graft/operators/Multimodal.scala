@@ -71,8 +71,6 @@ object Multimodal {
     * exact media dedup is a plain hash-shuffle groupBy like text dedup. */
   def contentFingerprint(content: Column): Column = md5(content)
 
-  def payloadSize(content: Column): Column = length(content)
-
   /** Real pure-JDK image decode via `javax.imageio` (PNG/BMP/JPEG readers
     * ship with the JDK — zero new dependencies). Returns real pixel
     * dimensions plus an 8-bin luminance histogram (integer Rec.601 weights,

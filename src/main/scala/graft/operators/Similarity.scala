@@ -1311,11 +1311,7 @@ object Similarity {
     val assigned = Checkpoints.track(
       autoAssignCells(c, nCentroids, targetCellSize, maxFlatCells)
         .transform(Checkpoints.cp(_)))
-    val l = assigned.select(col("cell"), col("id").as("id_a"), col("v").as("v_a"))
-    val r = assigned.select(col("cell"), col("id").as("id_b"), col("v").as("v_b"))
-    val dropped = l.join(r, Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(cosine(col("v_a"), col("v_b")) >= threshold)
+    val dropped = cosinePairs(assigned, "cell", threshold)
       .select(col("id_b").as("id")).distinct()
       .withColumn("__hit", lit(1))
     assigned.join(dropped, Seq("id"), "left")
@@ -1682,17 +1678,7 @@ object Similarity {
     val assigned = Checkpoints.track(
       autoAssignCellsTopK(c, nCentroids, targetCellSize, maxFlatCells,
         nProbe).transform(Checkpoints.cp(_)))
-    val l = assigned.select(col("cell"), col("id").as("id_a"),
-      col("v").as("v_a"))
-    val r = assigned.select(col("cell"), col("id").as("id_b"),
-      col("v").as("v_b"))
-    l.join(r, Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        cosine(col("v_a"), col("v_b")).as("sim"))
-      .filter(col("sim") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
-      .distinct()
+    cosinePairs(assigned, "cell", threshold).distinct()
   }
 
   private def cellNearDupPairsFrom(
@@ -1704,47 +1690,35 @@ object Similarity {
     val assigned = Checkpoints.track(
       autoAssignCells(c, nCentroids, targetCellSize, maxFlatCells)
         .transform(Checkpoints.cp(_)))
-    cellPairsFromAssigned(assigned, threshold)
+    cosinePairs(assigned, "cell", threshold)
   }
 
-  /** The within-cell pair stage over an already-assigned (id, v, cell)
-    * relation — [[cellNearDupPairsFrom]]'s tail, shared so callers that
-    * already hold the assignment (q201's sensitivity audit derives BOTH
-    * the population stats and the recall count from one trained
-    * quantizer) never train a second time (r19, guide §1.2: don't
-    * compute things twice). */
-  private def cellPairsFromAssigned(
-      assigned: DataFrame,
-      threshold: Double): DataFrame = {
-    val l = assigned.select(col("cell"), col("id").as("id_a"),
-      col("v").as("v_a"))
-    val r = assigned.select(col("cell"), col("id").as("id_b"),
-      col("v").as("v_b"))
-    l.join(r, Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
+  /** The cosine verify every vector pair generator ends in: (id, v) rows
+    * sharing a `key` value (cell, SRP bucket) pair up
+    * ([[Dedup.blockedPairs]]) and pairs with cosine ≥ `threshold` are
+    * kept as (id_a, id_b, sim 6dp). A pair sharing several keys
+    * (multi-probe) appears once per shared key. Callers that already
+    * hold the assignment or bucketing (q201's sensitivity audit derives
+    * both the population stats and the recall count from one trained
+    * quantizer) call it directly and never train a second time (r19). */
+  private def cosinePairs(
+      keyed: DataFrame,
+      key: String,
+      threshold: Double): DataFrame =
+    Dedup.blockedPairs(keyed, "id", Seq(key), Seq("v"))
       .select(col("id_a"), col("id_b"),
         cosine(col("v_a"), col("v_b")).as("sim"))
       .filter(col("sim") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
-  }
 
-  /** The within-bucket pair stage over an already-bucketed (id, v,
-    * bucket) relation — [[embeddingNearDupPairs]]' tail, shared for the
-    * same single-derivation reason as [[cellPairsFromAssigned]]. */
-  private def srpPairsFromBuckets(
-      bucketed: DataFrame,
-      threshold: Double): DataFrame = {
-    val l = bucketed.select(col("id").as("id_a"), col("v").as("v_a"),
-      col("bucket"))
-    val r = bucketed.select(col("id").as("id_b"), col("v").as("v_b"),
-      col("bucket"))
-    l.join(r, Seq("bucket"))
+  /** The exact truth of the recall audits: every (id_a < id_b) pair of
+    * the (id, v) relation with cosine ≥ `threshold`, by brute-force
+    * broadcast cross join — bounded sub-corpora only. */
+  private def exactCosinePairs(c: DataFrame, threshold: Double): DataFrame =
+    c.select(col("id").as("id_a"), col("v").as("v_a"))
+      .crossJoin(broadcast(c.select(col("id").as("id_b"), col("v").as("v_b"))))
       .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        cosine(col("v_a"), col("v_b")).as("sim"))
-      .filter(col("sim") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
-  }
+      .filter(cosine(col("v_a"), col("v_b")) >= threshold)
 
   /** SRP candidate-pair LOAD FACTOR: realized within-bucket pair work per
     * vector over the balanced-design budget,
@@ -1968,10 +1942,7 @@ object Similarity {
     val c = Checkpoints.track(
       corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
         .transform(Checkpoints.cp(_, eager = true)))
-    val truePairs = c.select(col("id").as("id_a"), col("v").as("v_a"))
-      .crossJoin(broadcast(c.select(col("id").as("id_b"), col("v").as("v_b"))))
-      .filter(col("id_a") < col("id_b"))
-      .filter(cosine(col("v_a"), col("v_b")) >= threshold)
+    val truePairs = exactCosinePairs(c, threshold)
     val srp =
       if (srpProbes <= 1)
         embeddingNearDupPairs(c, "id", "v", threshold, nPlanes, dim,
@@ -2085,15 +2056,11 @@ object Similarity {
     val base = srpStats.crossJoin(broadcast(cellStats))
     val withCounts =
       if (measureRecall) {
-        val truth = c.select(col("id").as("id_a"), col("v").as("v_a"))
-          .crossJoin(broadcast(
-            c.select(col("id").as("id_b"), col("v").as("v_b"))))
-          .filter(col("id_a") < col("id_b"))
-          .filter(cosine(col("v_a"), col("v_b")) >= threshold)
+        val truth = exactCosinePairs(c, threshold)
           .agg(count(lit(1)).as("n_true"))
-        val ns = srpPairsFromBuckets(bucketed, threshold)
+        val ns = cosinePairs(bucketed, "bucket", threshold)
           .agg(count(lit(1)).as("n_srp"))
-        val nc = cellPairsFromAssigned(assigned, threshold)
+        val nc = cosinePairs(assigned, "cell", threshold)
           .agg(count(lit(1)).as("n_cell"))
         base.crossJoin(broadcast(truth)).crossJoin(broadcast(ns))
           .crossJoin(broadcast(nc))
@@ -2177,7 +2144,7 @@ object Similarity {
     val planes = hyperplanes(p, dim, seed)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
       .withColumn("bucket", srpBucket(col("v"), planes))
-    srpPairsFromBuckets(c, threshold)
+    cosinePairs(c, "bucket", threshold)
   }
 
   /** Rank-`nProbes` SRP bucket assignment (the corpus-side analogue of
@@ -2285,15 +2252,7 @@ object Similarity {
     val c = Checkpoints.track(probedSrpBuckets(
       corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v")),
       planes, math.min(nProbes, p + 1)).transform(Checkpoints.cp(_)))
-    val l = c.select(col("id").as("id_a"), col("v").as("v_a"), col("bucket"))
-    val r = c.select(col("id").as("id_b"), col("v").as("v_b"), col("bucket"))
-    l.join(r, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        cosine(col("v_a"), col("v_b")).as("sim"))
-      .filter(col("sim") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
-      .distinct()
+    cosinePairs(c, "bucket", threshold).distinct()
   }
 
   /** Multi-probe SRP-LSH top-k (Lv et al. '07): ONE hash table, with each

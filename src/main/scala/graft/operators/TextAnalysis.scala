@@ -68,10 +68,6 @@ object TextAnalysis {
     length(regexp_replace(lower(text), "[^aeiou]", "")).cast("double") /
       greatest(length(text), lit(1)).cast("double")
 
-  def punctRatio(text: Column): Column =
-    length(regexp_replace(text, "[A-Za-z0-9\\s]", "")).cast("double") /
-      greatest(length(text), lit(1)).cast("double")
-
   /** Composite document-quality heuristic: length band + token band + vowel
     * ratio — the length/punct/stopword-ratio family of filters used to score
     * web text for training corpora. 0..3, higher = better.
@@ -523,30 +519,6 @@ object TextAnalysis {
       .select(col(idCol), col("n_tokens"),
         concat_ws(" ", transform(col("sp"), s => s.getField("enc_w")))
           .as("encoded"))
-  }
-
-  /** Scan-stage WordPiece encode: the segmentation fold applied directly
-    * to every word of every document inside one projection — ZERO
-    * shuffles, no per-doc reassembly state ([[bpeEncode]]'s philosophy;
-    * same output contract as [[wordpieceEncode]]).
-    *
-    * Trade-off vs the broadcast-join form: this re-segments repeated
-    * words (CPU ∝ corpus words, interpreted fold), the join form
-    * segments each distinct word once and pays a corpus shuffle plus a
-    * per-doc reassembly gather. Measured at sf1 (50k docs, ~22M words):
-    * scan 20.6 s vs join 6.2 s min-of-2 — on a Zipfian corpus the
-    * distinct-word relation is tiny, so paying the interpreted fold once
-    * per DISTINCT word wins decisively; the scan form remains the right
-    * choice only when words are near-unique (the fold runs once either
-    * way, and this form skips the shuffle entirely).
-    */
-  def wordpieceEncodeScan(df: DataFrame, idCol: String, textCol: String,
-      pieces: Seq[String], maxPieceLen: Int): DataFrame = {
-    val vmap = typedLit(pieces.map(_ -> 1).toMap)
-    val toks = flatten(transform(preTokens(col(textCol)),
-      w => longestMatchSegment(w, vmap, maxPieceLen)))
-    df.select(col(idCol), size(toks).as("n_tokens"),
-      concat_ws(" ", toks).as("encoded"))
   }
 
   // ---- Unigram-LM tokenizer (Kudo '18) ----------------------------------

@@ -1,6 +1,7 @@
 package graft.sinks
 
-import java.util.Properties
+import java.nio.file.{Files, Path}
+import java.util.{Comparator, Properties}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -96,7 +97,9 @@ object JdbcLoad {
 
   /** I1/I2: the reference's incremental sync — read source and target
     * tables, set-diff merge on `key` (insert/update/delete), rewrite the
-    * target. Missing/empty target = initial load (I2).
+    * target. A MISSING target = initial load (I2); any other failure to
+    * read it (connection, permission, ...) is rethrown, never turned
+    * into an initial load that would wipe the target.
     */
   def incrementalSync(
       spark: SparkSession,
@@ -108,15 +111,44 @@ object JdbcLoad {
     val source = readTable(spark, url, sourceTable, driver)
     val target =
       try readTable(spark, url, targetTable, driver)
-      catch { case _: Exception => source.limit(0) } // I2: initial load
+      catch { case e: Exception if isMissingTarget(e) => source.limit(0) }
     val merged = SnapshotMerge.merge(source, target.drop("is_active"), key)
       .drop("is_active")
     // Stage to durable storage before the overwrite: the overwrite DROPs
     // the table the merge plan reads from, and a cache() is not a safe
     // barrier (a lost executor would recompute from the dropped table).
-    val stage = java.nio.file.Files.createTempDirectory("graft-jdbc-stage")
-    merged.write.mode("overwrite").parquet(stage.toString)
-    writeOverwrite(spark.read.parquet(stage.toString), url, targetTable,
-      driver = driver)
+    overwriteViaStage(merged, "graft-jdbc-stage")(
+      writeOverwrite(_, url, targetTable, driver = driver))
+  }
+
+  /** SQLStates for "table does not exist": Derby, MySQL. */
+  private val MissingTableStates = Set("42X05", "42S02")
+
+  /** True iff `e` (or a cause) says the sync target does not exist yet:
+    * a missing JDBC table or Spark's parquet path-not-found. The only
+    * read failure either incremental sync treats as an initial load. */
+  private[graft] def isMissingTarget(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case s: java.sql.SQLException => MissingTableStates(s.getSQLState)
+      case a: org.apache.spark.sql.AnalysisException =>
+        a.getCondition == "PATH_NOT_FOUND"
+      case _ => false
+    }
+
+  /** Write `merged` to a fresh temp dir, hand its re-read to `overwrite`,
+    * and delete the dir once `overwrite` returns or throws: the merge
+    * plan reads the target `overwrite` replaces, so it must be cut from
+    * the target first. */
+  private[graft] def overwriteViaStage(merged: DataFrame, prefix: String)(
+      overwrite: DataFrame => Unit): Unit = {
+    val stage = Files.createTempDirectory(prefix)
+    try {
+      merged.write.mode("overwrite").parquet(stage.toString)
+      overwrite(merged.sparkSession.read.parquet(stage.toString))
+    } finally {
+      val tree = Files.walk(stage)
+      try tree.sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+      finally tree.close()
+    }
   }
 }

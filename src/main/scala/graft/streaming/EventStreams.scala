@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.{Dedup, SnapshotMerge}
+import graft.sinks.JdbcLoad
 
 /** Structured Streaming shapes (SURVEY §2.9): the reference's batch CDC
   * merge re-hosted as a `foreachBatch` incremental sync, plus event-time
@@ -188,18 +189,6 @@ object EventStreams {
         expr(s"$leftKey = $rightKey AND $rightTs >= $leftTs " +
           s"AND $rightTs <= $leftTs + interval $maxLag"),
         joinType)
-
-  /** Sliding-window per-user activity (frame overlap = 2×). */
-  def slidingUserActivity(
-      events: DataFrame,
-      width: String = "10 minutes",
-      slide: String = "5 minutes"): DataFrame =
-    events
-      .withWatermark("ts", "30 minutes")
-      .groupBy(window(col("ts"), width, slide), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("win_start"), col("user_id"),
-        col("n_events"))
 
   /** Open-session accumulator for [[statefulSessions]]. Times are epoch
     * millis. */
@@ -418,16 +407,15 @@ object EventStreams {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val target =
           try spark.read.parquet(targetPath)
-          catch { case _: Exception => batch.limit(0) } // I2 initial load
+          catch { // I2 initial load: only a missing target
+            case e: Exception if JdbcLoad.isMissingTarget(e) => batch.limit(0)
+          }
         val merged = SnapshotMerge.merge(batch, target.drop("is_active"), key)
         // Stage to a scratch dir before overwriting: the merge plan reads
         // the target we are about to replace, and cache() is not a safe
         // barrier (lost partitions recompute from the overwritten path).
-        val stage = Files.createTempDirectory("graft-sync-stage")
-        merged.write.mode("overwrite").parquet(stage.toString)
-        spark.read.parquet(stage.toString)
-          .write.mode("overwrite").parquet(targetPath)
-        ()
+        JdbcLoad.overwriteViaStage(merged, "graft-sync-stage")(
+          _.write.mode("overwrite").parquet(targetPath))
       }
       .start()
   }

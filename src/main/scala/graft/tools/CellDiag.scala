@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.Similarity
+import graft.operators.{Dedup, Similarity}
 
 /** Dev diagnostic (r16): decompose the semDeDup cost at a given SF dir
   * into its three stages — quantizer train+assign, cell-population pair
@@ -133,11 +133,7 @@ object CellDiag {
     val (nCells, maxPop, candPairs) =
       (pops.getLong(0), pops.getLong(1), pops.getLong(2))
     val drops = t("pairjoin") {
-      val l = assigned.select(col("cell"), col("id").as("id_a"),
-        col("v").as("v_a"))
-      val r = assigned.select(col("cell"), col("id").as("id_b"),
-        col("v").as("v_b"))
-      l.join(r, Seq("cell")).filter(col("id_a") < col("id_b"))
+      Dedup.blockedPairs(assigned, "id", Seq("cell"), Seq("v"))
         .filter(Similarity.cosine(col("v_a"), col("v_b")) >= 0.9)
         .select(col("id_b")).distinct().count()
     }

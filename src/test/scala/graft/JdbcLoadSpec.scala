@@ -1,6 +1,10 @@
 package graft
 
+import java.io.File
+import java.lang.reflect.{InvocationHandler, InvocationTargetException, Method, Proxy}
 import java.nio.file.Files
+import java.sql.{Connection, Driver, DriverPropertyInfo, SQLException}
+import java.util.Properties
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -228,4 +232,73 @@ class JdbcLoadSpec extends AnyFunSuite with SparkSpec {
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Double]("bal")).toMap
     assert(after === Map(1L -> 10.0, 2L -> 99.0, 4L -> 40.0))
   }
+
+  private def stageDirs(): Set[String] =
+    Option(new File(System.getProperty("java.io.tmpdir")).list())
+      .fold(Set.empty[String])(_.filter(_.startsWith("graft-jdbc-stage")).toSet)
+
+  test("incremental sync deletes its stage directory") {
+    JdbcLoad.writeOverwrite(Seq((1L, "a")).toDF("id", "name"), url, "stage_src")
+    val before = stageDirs()
+    JdbcLoad.incrementalSync(spark, url, "stage_src", "stage_tgt", "id")
+    assert(JdbcLoad.readTable(spark, url, "stage_tgt").count() === 1)
+    assert(stageDirs() === before)
+  }
+
+  test("only a missing target is an initial load; other read errors rethrow") {
+    JdbcLoad.writeOverwrite(Seq((1L, "old")).toDF("id", "name"), url,
+      FailingReadDriver.Table)
+    JdbcLoad.writeOverwrite(Seq((1L, "new"), (2L, "b")).toDF("id", "name"),
+      url, "fail_src")
+    val e = intercept[Exception] {
+      JdbcLoad.incrementalSync(spark, url, "fail_src", FailingReadDriver.Table,
+        "id", driver = classOf[FailingReadDriver].getName)
+    }
+    assert(!JdbcLoad.isMissingTarget(e))
+    val rows = JdbcLoad.readTable(spark, url, FailingReadDriver.Table)
+      .collect().map(r => r.getAs[Long]("id") -> r.getAs[String]("name"))
+    assert(rows.toSeq === Seq(1L -> "old"), "target must be left untouched")
+    // the two errors that do mean "not there yet"
+    val missingTable = intercept[Exception](
+      JdbcLoad.readTable(spark, url, "no_such_table").schema)
+    assert(JdbcLoad.isMissingTarget(missingTable))
+    val missingPath = intercept[Exception](spark.read.parquet(
+      Files.createTempDirectory("graft-none").toString + "/absent"))
+    assert(JdbcLoad.isMissingTarget(missingPath))
+  }
+}
+
+/** Derby connections on which reading [[FailingReadDriver.Table]]'s rows
+  * fails as an unreachable server would (SQLState 08001); the table's
+  * existence probe and writes still work. */
+final class FailingReadDriver extends Driver {
+  private val derby = Class.forName(JdbcLoad.DerbyDriver)
+    .getDeclaredConstructor().newInstance().asInstanceOf[Driver]
+
+  def connect(url: String, info: Properties): Connection = {
+    val c = derby.connect(url, info)
+    if (c == null) null
+    else Proxy.newProxyInstance(classOf[Connection].getClassLoader,
+      Array[Class[_]](classOf[Connection]), new InvocationHandler {
+        def invoke(self: AnyRef, m: Method, args: Array[AnyRef]): AnyRef = {
+          if (m.getName == "prepareStatement" && args(0).toString.toLowerCase
+              .startsWith(s"select * from ${FailingReadDriver.Table}"))
+            throw new SQLException("connection refused (injected)", "08001")
+          try m.invoke(c, (if (args == null) Array.empty[AnyRef] else args): _*)
+          catch { case e: InvocationTargetException => throw e.getCause }
+        }
+      }).asInstanceOf[Connection]
+  }
+
+  def acceptsURL(url: String): Boolean = derby.acceptsURL(url)
+  def getPropertyInfo(url: String, info: Properties): Array[DriverPropertyInfo] =
+    derby.getPropertyInfo(url, info)
+  def getMajorVersion: Int = derby.getMajorVersion
+  def getMinorVersion: Int = derby.getMinorVersion
+  def jdbcCompliant: Boolean = false
+  def getParentLogger: java.util.logging.Logger = derby.getParentLogger
+}
+
+object FailingReadDriver {
+  val Table = "unreachable_tgt"
 }

@@ -334,6 +334,31 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     assert(recall >= 0.9, s"planned LSH recall $recall below target")
   }
 
+  test("blockedPairs: a < b only, null keys never pair, one row per shared key") {
+    val keyed = Seq[(Long, Option[String], String)](
+      (1L, Some("x"), "p1"), (1L, Some("y"), "p1"), // 1 and 2 share x and y
+      (2L, Some("x"), "p2"), (2L, Some("y"), "p2"),
+      (8L, Some("x"), "p8"),                        // shares only x
+      (3L, Some("solo"), "p3"),                     // a one-member key
+      (4L, None, "p4"), (5L, None, "p5"),           // null keys
+      (6L, Some("z"), "p6"), (6L, Some("z"), "p6")  // one id twice under z
+    ).toDF("id", "k", "p")
+    val out = Dedup.blockedPairs(keyed, "id", Seq("k"), Seq("p"))
+    assert(out.columns.toSeq === Seq("id_a", "id_b", "p_a", "p_b"))
+    val rows = out.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3)))
+    assert(rows.forall { case (a, b, _, _) => a < b }, "only id_a < id_b")
+    assert(rows.forall { case (a, b, pa, pb) => pa == s"p$a" && pb == s"p$b" })
+    val ids = rows.flatMap { case (a, b, _, _) => Seq(a, b) }.toSet
+    assert(!ids.exists(Set(3L, 4L, 5L, 6L)),
+      "no self pairs, no one-member keys, no null-key pairs")
+    // multiplicity = shared-key count: the contract that tells callers
+    // when a relation with several keys per id needs .distinct()
+    val mult = rows.groupBy { case (a, b, _, _) => (a, b) }
+      .map { case (k, v) => k -> v.length }
+    assert(mult === Map((1L, 2L) -> 2, (1L, 8L) -> 1, (2L, 8L) -> 1))
+  }
+
   test("simhash: identical docs collide, near-dups land close") {
     val two = Seq((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma delta"))
       .toDF("doc_id", "text")

@@ -256,6 +256,32 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(after === Map(2L -> "b2", 3L -> "c")) // 1 hard-deleted
   }
 
+  test("incremental sync: stage dirs are deleted, an unreadable target is not an initial load") {
+    def stageDirs(): Set[String] =
+      Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+        .fold(Set.empty[String])(_.filter(_.startsWith("graft-sync-stage")).toSet)
+    val sample = Seq((1L, "a", 1.0)).toDF("id", "name", "bal")
+    val drop = Files.createTempDirectory("graft-src").toString
+    Seq((1L, "a", 1.0)).toDF("id", "name", "bal").write.mode("overwrite").json(drop)
+    val target = Files.createTempDirectory("graft-target").toString + "/t"
+    val before = stageDirs()
+    EventStreams.incrementalSync(spark, drop, target, "id", sample)
+      .awaitTermination()
+    assert(spark.read.parquet(target).count() === 1)
+    assert(stageDirs() === before)
+
+    // a target that exists but cannot be read must fail the batch, not be
+    // replaced by the snapshot as if it were missing
+    val broken = Files.createTempDirectory("graft-broken")
+    val junk = broken.resolve("part-00000.parquet")
+    Files.write(junk, "not parquet".getBytes("UTF-8"))
+    intercept[Exception] {
+      EventStreams.incrementalSync(spark, drop, broken.toString, "id", sample)
+        .awaitTermination()
+    }
+    assert(new String(Files.readAllBytes(junk), "UTF-8") === "not parquet")
+  }
+
   test("corpusIngest: exactly-once partitioned ingestion across restarts") {
     val in = Files.createTempDirectory("graft-ingest-in").toString
     val out = Files.createTempDirectory("graft-ingest-out").toString + "/corpus"
