@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 
-import graft.sinks.NotionSink.NotionApi
+import graft.sinks.NotionSink.{ExistingPage, NotionApi}
 
 /** Live-wire [[NotionSink.NotionApi]] over `java.net.http` — the production
   * transport behind the trait the sink already writes through (reference
@@ -24,7 +24,9 @@ import graft.sinks.NotionSink.NotionApi
   * values to strings ([[NotionSink.formatProperties]]); this class re-wraps
   * each by its declared property type — `title`/`rich_text` as 2000-char
   * text runs, `number` as a bare JSON number, `checkbox` as a boolean,
-  * `date` as `{date: {start: …}}`.
+  * `date` as `{date: {start: …}}`; `is_active` is always a checkbox.
+  * [[existingPages]] reads each property back into that string form, so
+  * the sink can skip rows whose page already holds them.
   *
   * Topology at scale: the instance that ships into `foreachPartition` is
   * just endpoint config (`@transient lazy` HttpClient — one keep-alive pool
@@ -85,7 +87,9 @@ class HttpNotionApi(
   /** Wrap a pre-formatted value string by its declared property type. */
   private def propertyJson(name: String, v: String): JsonNode = {
     val node = mapper.createObjectNode()
-    propertyTypes.getOrElse(name, "rich_text") match {
+    val kind =
+      if (name == "is_active") "checkbox" else propertyTypes.getOrElse(name, "rich_text")
+    kind match {
       case "title" => node.set[JsonNode]("title", textRun(v))
       case "number" => node.put("number", new java.math.BigDecimal(v))
       case "checkbox" => node.put("checkbox", v.toBoolean)
@@ -145,9 +149,35 @@ class HttpNotionApi(
     databaseId
   }
 
-  override def existingRecords(): Map[Long, String] = {
+  /** Inverse of [[propertyJson]]: a read-back property value in the
+    * string form [[NotionSink.formatProperties]] emits; `None` when empty
+    * or of a type the sink never writes. */
+  private def propertyValue(p: JsonNode): Option[String] = {
+    def text(runs: JsonNode): String =
+      runs.elements().asScala.map(_.path("text").path("content").asText("")).mkString
+    def present(n: JsonNode): Option[JsonNode] = Option(n).filterNot(_.isNull)
+    present(p.get("title")).map(text)
+      .orElse(present(p.get("rich_text")).map(text))
+      .orElse(present(p.get("number")).map { n =>
+        if (n.isIntegralNumber) n.asText() else NotionSink.numString(n.asDouble())
+      })
+      .orElse(present(p.get("checkbox")).map(_.asBoolean().toString))
+      .orElse(present(p.path("date").get("start")).map(_.asText()))
+  }
+
+  override def existingRecords(): Map[Long, String] =
+    existingPages().map { case (k, p) => k -> p.pageId }
+
+  /** S5 read-back with page state: every property decoded by
+    * [[propertyValue]], `is_active` (absent = active) as the flag. */
+  override def existingPages(): Map[Long, ExistingPage] = {
     require(databaseId.nonEmpty, "createDatabase first (or pass an id)")
-    val out = Map.newBuilder[Long, String]
+    // key lives in the title property's first text run (the reference
+    // parses subject_id the same way); rows without one are skipped
+    val titleName = propertyTypes.collectFirst {
+      case (n, "title") => n
+    }.getOrElse("subject_id")
+    val out = Map.newBuilder[Long, ExistingPage]
     var cursor: Option[String] = None
     var hasMore = true
     while (hasMore) {
@@ -155,15 +185,19 @@ class HttpNotionApi(
       cursor.foreach(body.put("start_cursor", _))
       val page = request("POST", s"/v1/databases/$databaseId/query", Some(body))
       page.get("results").elements().asScala.foreach { pg =>
-        // key lives in the title property's first text run (the reference
-        // parses subject_id the same way); rows without one are skipped
-        val titleName = propertyTypes.collectFirst {
-          case (n, "title") => n
-        }.getOrElse("subject_id")
-        val title = pg.get("properties").path(titleName).path("title")
+        val props = pg.get("properties")
+        val title = props.path(titleName).path("title")
         if (title.isArray && title.size() > 0) {
           val content = title.get(0).path("text").path("content").asText("")
-          content.toLongOption.foreach(k => out += k -> pg.get("id").asText())
+          content.toLongOption.foreach { k =>
+            val values = Map.newBuilder[String, String]
+            props.fields().forEachRemaining { e =>
+              if (e.getKey != "is_active")
+                propertyValue(e.getValue).foreach(v => values += e.getKey -> v)
+            }
+            val active = props.path("is_active").path("checkbox").asBoolean(true)
+            out += k -> ExistingPage(pg.get("id").asText(), Some(values.result()), active)
+          }
         }
       }
       hasMore = page.path("has_more").asBoolean(false)

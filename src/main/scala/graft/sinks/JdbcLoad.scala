@@ -1,11 +1,15 @@
 package graft.sinks
 
 import java.nio.file.{Files, Path}
+import java.sql.{Connection, PreparedStatement}
 import java.util.{Comparator, Properties}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.jdbc.{JDBCOptions, JdbcUtils}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, MapType}
+import org.apache.spark.sql.jdbc.JdbcDialects
+import org.apache.spark.sql.types.{ArrayType, DateType, MapType, NumericType, StructType,
+  TimestampType}
 
 import graft.operators.SnapshotMerge
 
@@ -96,10 +100,24 @@ object JdbcLoad {
     spark.read.jdbc(url, table, props(driver))
 
   /** I1/I2: the reference's incremental sync — read source and target
-    * tables, set-diff merge on `key` (insert/update/delete), rewrite the
-    * target. A MISSING target = initial load (I2); any other failure to
-    * read it (connection, permission, ...) is rethrown, never turned
-    * into an initial load that would wipe the target.
+    * tables, set-diff merge on `key` (insert/update/delete), and apply
+    * only the changed rows to the target. A MISSING target = initial load
+    * (I2) through [[writeOverwrite]]; any other failure to read it
+    * (connection, permission, ...) is rethrown, never turned into an
+    * initial load that would wipe the target.
+    *
+    * The changed rows (`SnapshotMerge.mergeActions` action ≠ `unchanged`,
+    * plus the source's null-key rows) are collected first: the apply
+    * deletes target rows the merge plan reads, so the plan must be
+    * finished before the apply starts. They are the delta, not the table,
+    * and the Notion read-back that follows in the pipeline holds a
+    * snapshot of the whole collection on the driver anyway. [[applyDelta]]
+    * then writes them in one transaction, so readers see the old target
+    * or the new one. The result equals `SnapshotMerge.merge(source,
+    * target, key)` without `is_active` when `key` is unique on each side
+    * (merge repeats a repeated key's rows once per pair). A target whose columns differ
+    * from the merge output, or whose key is not numeric, date or
+    * timestamp, is rewritten whole from the staged merge instead.
     */
   def incrementalSync(
       spark: SparkSession,
@@ -110,15 +128,141 @@ object JdbcLoad {
       driver: String = DerbyDriver): Unit = {
     val source = readTable(spark, url, sourceTable, driver)
     val target =
-      try readTable(spark, url, targetTable, driver)
-      catch { case e: Exception if isMissingTarget(e) => source.limit(0) }
-    val merged = SnapshotMerge.merge(source, target.drop("is_active"), key)
-      .drop("is_active")
-    // Stage to durable storage before the overwrite: the overwrite DROPs
-    // the table the merge plan reads from, and a cache() is not a safe
-    // barrier (a lost executor would recompute from the dropped table).
-    overwriteViaStage(merged, "graft-jdbc-stage")(
-      writeOverwrite(_, url, targetTable, driver = driver))
+      try Some(readTable(spark, url, targetTable, driver))
+      catch { case e: Exception if isMissingTarget(e) => None }
+    target match {
+      case None =>
+        writeOverwrite(SnapshotMerge.merge(source, source.limit(0), key)
+          .drop("is_active"), url, targetTable, driver = driver)
+      case Some(t) =>
+        val old = t.drop("is_active")
+        val merged = SnapshotMerge.merge(source, old, key).drop("is_active")
+        val sameColumns = merged.schema.map(f => f.name -> f.dataType).toSet ==
+          t.schema.map(f => f.name -> f.dataType).toSet
+        // string and binary keys can land as CLOB/LONGTEXT columns, which
+        // Derby cannot compare and MySQL cannot index without a prefix
+        val scalarKey = merged.schema(key).dataType match {
+          case _: NumericType | DateType | TimestampType => true
+          case _ => false
+        }
+        if (sameColumns && scalarKey) {
+          val dataCols = merged.columns.toSeq
+          val changed = SnapshotMerge.mergeActions(source, old, key,
+              dataCols.filterNot(_ == key))
+            .filter(col("action") =!= "unchanged")
+            .select((col("action") +: dataCols.map(col)): _*)
+          val nullKeyRows = source.filter(col(key).isNull)
+            .select((lit("insert").as("action") +: dataCols.map(col)): _*)
+          val delta = changed.unionByName(nullKeyRows)
+          applyDelta(delta.collect(), delta.schema, url, targetTable, key, driver)
+        } else
+          // Stage to durable storage before the overwrite: the overwrite
+          // DROPs the table the merge plan reads from, and a cache() is
+          // not a safe barrier (a lost executor would recompute from the
+          // dropped table).
+          overwriteViaStage(merged, "graft-jdbc-stage")(
+            writeOverwrite(_, url, targetTable, driver = driver))
+    }
+  }
+
+  /** Rows per JDBC batch of [[applyDelta]] (the reference's chunksize). */
+  private val ApplyBatch = 1000
+
+  /** Apply delta rows — `action` plus the target's columns — to `table`
+    * in one transaction on one connection through `driver`: a batched
+    * `DELETE … WHERE key = ?` for updated and deleted keys, one delete of
+    * the null-key rows, and a batched prepared `INSERT` of the inserted
+    * and updated rows (the source's null-key rows arrive as inserts). Commits, or rolls back and rethrows. A target with no
+    * index on `key` gets one first, outside the transaction. */
+  private def applyDelta(delta: Array[Row], schema: StructType, url: String,
+      table: String, key: String, driver: String): Unit = {
+    val dialect = JdbcDialects.get(url)
+    val actionIdx = schema.fieldIndex("action")
+    val cols = schema.fields.toSeq.filterNot(_.name == "action")
+    // (row index, JDBC null type) of a bound column
+    def slot(name: String): (Int, Int) = {
+      val t = schema(name).dataType
+      schema.fieldIndex(name) -> dialect.getJDBCType(t)
+        .orElse(JdbcUtils.getCommonJDBCType(t)).fold(java.sql.Types.NULL)(_.jdbcNullType)
+    }
+    val keySlot = slot(key)
+    val colSlots = cols.map(f => slot(f.name))
+    val q = dialect.quoteIdentifier _
+    val conn = dialect.createConnectionFactory(
+      new JDBCOptions(url, table, Map("driver" -> driver)))(-1)
+    try {
+      // without an index each keyed DELETE scans the whole table (100k
+      // rows × 2k keys: ~100 s on Derby, against ~0.3 s with one)
+      if (!keyIndexed(conn, table, key)) {
+        val ddl = conn.createStatement()
+        try ddl.executeUpdate(
+          s"CREATE INDEX ${q(s"${bareName(table)}_${key}_idx")} ON $table (${q(key)})")
+        finally ddl.close()
+      }
+      conn.setAutoCommit(false)
+      val del = conn.prepareStatement(s"DELETE FROM $table WHERE ${q(key)} = ?")
+      val ins = conn.prepareStatement(
+        s"INSERT INTO $table (${cols.map(f => q(f.name)).mkString(", ")}) " +
+          s"VALUES (${cols.map(_ => "?").mkString(", ")})")
+      try {
+        val nullKeys = conn.createStatement()
+        try nullKeys.executeUpdate(s"DELETE FROM $table WHERE ${q(key)} IS NULL")
+        finally nullKeys.close()
+        var pending = 0
+        def flush(): Unit = { del.executeBatch(); ins.executeBatch(); pending = 0 }
+        delta.foreach { r =>
+          val action = r.getString(actionIdx)
+          if (action != "insert") { setParam(del, 1, r, keySlot); del.addBatch() }
+          if (action != "delete") {
+            colSlots.zipWithIndex.foreach { case (s, j) => setParam(ins, j + 1, r, s) }
+            ins.addBatch()
+          }
+          pending += 1
+          if (pending == ApplyBatch) flush()
+        }
+        flush()
+        conn.commit()
+      } catch {
+        case e: Throwable =>
+          try conn.rollback() catch { case r: Exception => e.addSuppressed(r) }
+          throw e
+      } finally { del.close(); ins.close() }
+    } finally conn.close()
+  }
+
+  /** `table` without its schema prefix and quotes. */
+  private def bareName(table: String): String =
+    table.split('.').last.filterNot(c => c == '"' || c == '`')
+
+  /** True iff some index of `table` leads with `column`. Names compare
+    * case-insensitively: catalogs store unquoted names upper- (Derby) or
+    * as-given (MySQL). */
+  private def keyIndexed(conn: Connection, table: String,
+      column: String): Boolean = {
+    val name = bareName(table)
+    Seq(name, name.toUpperCase, name.toLowerCase).distinct.exists { n =>
+      val rs = conn.getMetaData.getIndexInfo(null, null, n, false, true)
+      try Iterator.continually(rs.next()).takeWhile(identity).exists { _ =>
+        rs.getShort("ORDINAL_POSITION") == 1 &&
+          column.equalsIgnoreCase(rs.getString("COLUMN_NAME"))
+      } finally rs.close()
+    }
+  }
+
+  /** Bind the value in `slot` (row index, JDBC null type) of `r` as
+    * parameter `p`: NULL by type, java.time values as their java.sql
+    * forms, anything else as is. */
+  private def setParam(ps: PreparedStatement, p: Int, r: Row,
+      slot: (Int, Int)): Unit = {
+    val (i, nullType) = slot
+    if (r.isNullAt(i)) ps.setNull(p, nullType)
+    else r.get(i) match {
+      case v: java.time.Instant => ps.setTimestamp(p, java.sql.Timestamp.from(v))
+      case v: java.time.LocalDateTime => ps.setTimestamp(p, java.sql.Timestamp.valueOf(v))
+      case v: java.time.LocalDate => ps.setDate(p, java.sql.Date.valueOf(v))
+      case v: String => ps.setString(p, v)
+      case v => ps.setObject(p, v)
+    }
   }
 
   /** SQLStates for "table does not exist": Derby, MySQL. */

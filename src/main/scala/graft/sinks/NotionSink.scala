@@ -19,11 +19,18 @@ import graft.sources.bangumi.{RateLimiter, Retry}
   * becomes `foreachPartition` with a pooled client per executor, batched
   * rate-limited writes, per-row error isolation (R4 — failed rows counted,
   * pipeline continues), and `LongAccumulator` success/error counters (A5).
-  * The upsert decision (insert vs update vs soft delete) is made
-  * distributively by joining against the read-back key snapshot (S5/J4)
-  * instead of a driver-side dict.
+  * The upsert decision (insert vs update vs skip vs soft delete) is made
+  * distributively by joining against the read-back page snapshot (S5/J4)
+  * instead of a driver-side dict, so a sync writes only the pages whose
+  * properties or active flag change.
   */
 object NotionSink {
+
+  /** One read-back page: its id, its properties in the string form
+    * [[formatProperties]] emits (`None`: state unknown) and its
+    * `is_active` flag. */
+  case class ExistingPage(pageId: String,
+      properties: Option[Map[String, String]], active: Boolean)
 
   /** Transport interface; production = HTTP, tests = [[InMemoryNotionApi]].
     * Implementations must be thread-safe (one instance per executor). */
@@ -38,6 +45,10 @@ object NotionSink {
     def createDatabase(name: String, properties: Map[String, String]): String
     /** S5: read back existing (subject_id → page_id). */
     def existingRecords(): Map[Long, String]
+    /** S5 with page state: subject_id → page. The default knows only the
+      * ids, so every page counts as active with unknown properties. */
+    def existingPages(): Map[Long, ExistingPage] =
+      existingRecords().map { case (k, p) => k -> ExistingPage(p, None, true) }
     /** K5: insert one row of typed properties. Throws on failure. */
     def insert(key: Long, properties: Map[String, String]): Unit
     /** Upsert branch: replace properties of an existing page. */
@@ -62,7 +73,7 @@ object NotionSink {
 
   /** F11 int/float split (reference `notion_data_ingestion.py:273-278`):
     * an integral float renders as an integer (`5`, not `5.0`). */
-  private def numString(d: Double): String =
+  private[sinks] def numString(d: Double): String =
     if (d.isWhole && math.abs(d) < 1e15) d.toLong.toString else d.toString
 
   /** F8/F11/F12: per-value property formatting — text truncated to 2000
@@ -86,13 +97,33 @@ object NotionSink {
       }
     }.toMap
 
+  /** `unchanged`: rows whose page already held their values and was
+    * active, so no request was sent. */
   case class WriteReport(inserted: Long, updated: Long, softDeleted: Long,
-      errors: Long)
+      errors: Long, unchanged: Long)
+
+  /** True iff an active page's read-back `stored` already holds every
+    * formatted property of `props`; `numeric` names the columns compared
+    * as numbers (`9` = `9.0`, `1.0E-5` = `0.000010`). */
+  private def holds(props: Map[String, String],
+      stored: scala.collection.Map[String, String],
+      numeric: Set[String]): Boolean =
+    props.forall { case (k, v) =>
+      stored.get(k).exists { s =>
+        s == v || numeric(k) && scala.util.Try(
+          new java.math.BigDecimal(s).compareTo(new java.math.BigDecimal(v)) == 0)
+          .getOrElse(false)
+      }
+    }
 
   /** Merge-write `df` (keyed by `keyCol`) into the sink: new keys insert,
-    * existing keys update, keys present only in the sink soft-delete.
-    * `minIntervalMs` paces requests per partition (R2: the reference's
-    * API budget is ~3 req/s).
+    * existing keys whose page differs update, keys present only in the
+    * sink soft-delete. A row is skipped iff its page is active and holds
+    * every non-null formatted property already; an inactive page, or one
+    * whose state the transport cannot read back, is updated with
+    * `is_active = true`, so a re-added key comes back. A page that is
+    * already inactive is not soft-deleted again. `minIntervalMs` paces
+    * requests per partition (R2: the reference's API budget is ~3 req/s).
     */
   def upsert(
       df: DataFrame,
@@ -102,43 +133,61 @@ object NotionSink {
     val spark = df.sparkSession
     val schema = df.schema
     val keyIdx = schema.fieldIndex(keyCol)
-    // the join below appends __key/__page_id; an input column with either
-    // name would make the join ambiguous and the insert/update split wrong
-    require(!schema.fieldNames.exists(Set("__key", "__page_id")),
-      "input frame must not contain reserved columns __key/__page_id")
+    // the join below appends the reserved columns; an input column with
+    // one of their names would make the join ambiguous and the
+    // insert/update split wrong. is_active is the sink's own flag.
+    val reserved = Set("__key", "__page_id", "__props", "__active", "is_active")
+    require(!schema.fieldNames.exists(reserved),
+      s"input frame must not contain reserved columns ${reserved.mkString("/")}")
+    val numeric = schema.fields.collect {
+      case f if f.dataType.isInstanceOf[NumericType] => f.name
+    }.toSet
 
     // S5/J4: sink snapshot is small relative to the frame — broadcast it.
-    val existing = api.existingRecords()
+    val existing = api.existingPages()
     val existingDf = spark.createDataFrame(
-      existing.toSeq.map { case (k, p) => Row(k, p) }.asJava,
+      existing.toSeq.map { case (k, p) =>
+        Row(k, p.pageId, p.properties.orNull, p.active)
+      }.asJava,
       StructType(Seq(StructField("__key", LongType),
-        StructField("__page_id", StringType))))
+        StructField("__page_id", StringType),
+        StructField("__props", MapType(StringType, StringType)),
+        StructField("__active", BooleanType))))
 
     val okAcc = spark.sparkContext.longAccumulator("notion.ok")
     val updAcc = spark.sparkContext.longAccumulator("notion.updated")
+    val sameAcc = spark.sparkContext.longAccumulator("notion.unchanged")
     val errAcc = spark.sparkContext.longAccumulator("notion.errors")
+    val matchedAcc = spark.sparkContext.collectionAccumulator[Long]("notion.matched")
 
     val joined =
       df.join(broadcast(existingDf), col(keyCol) === col("__key"), "left_outer")
     val joinedKeyIdx = joined.schema.fieldIndex("__key")
     val pageIdIdx = joined.schema.fieldIndex("__page_id")
+    val propsIdx = joined.schema.fieldIndex("__props")
+    val activeIdx = joined.schema.fieldIndex("__active")
     joined
       .foreachPartition { rows: Iterator[Row] =>
         val limiter = new RateLimiter(minIntervalMs)
         rows.foreach { row =>
-          limiter.acquire()
+          val props = formatProperties(row, schema)
+          val known = !row.isNullAt(propsIdx)
+          val active = !row.isNullAt(activeIdx) && row.getBoolean(activeIdx)
+          if (!row.isNullAt(joinedKeyIdx)) matchedAcc.add(row.getLong(joinedKeyIdx))
           try {
             if (row.isNullAt(joinedKeyIdx)) { // no __key → insert
-              Retry.withBackoff(3, 100L) {
-                api.insert(row.getLong(keyIdx),
-                  formatProperties(row, schema))
-              }
+              limiter.acquire()
+              Retry.withBackoff(3, 100L)(api.insert(row.getLong(keyIdx), props))
               okAcc.add(1)
+            } else if (active && known &&
+                holds(props, row.getMap[String, String](propsIdx), numeric)) {
+              sameAcc.add(1) // the PATCH would change nothing
             } else {
-              Retry.withBackoff(3, 100L) {
-                api.update(row.getString(pageIdIdx),
-                  formatProperties(row, schema))
-              }
+              val patch = if (active && known) props
+                else props + ("is_active" -> "true")
+              limiter.acquire()
+              Retry.withBackoff(3, 100L)(
+                api.update(row.getString(pageIdIdx), patch))
               updAcc.add(1)
             }
           } catch {
@@ -147,27 +196,33 @@ object NotionSink {
         }
       }
 
-    // I3: soft-delete sink keys absent from the frame — J2 anti join, with
-    // the PATCH loop run in foreachPartition like the insert/update lanes
-    // (nothing materializes on the driver: a mass-deletion sync stays
-    // distributed). Same R4 envelope: retry, then count-and-continue.
+    // I3: soft-delete the active sink pages whose key the frame lacks. The
+    // pass above matched every frame key the sink has, so the delete set
+    // needs no second scan of the frame; the PATCH loop runs in
+    // foreachPartition like the insert/update lanes, so a mass-deletion
+    // sync stays distributed. Same R4 envelope: retry, then
+    // count-and-continue.
+    val matched = matchedAcc.value.asScala.toSet
+    val gone = existing.collect {
+      case (k, p) if p.active && !matched(k) => p.pageId
+    }.toSeq
     val delAcc = spark.sparkContext.longAccumulator("notion.deleted")
     val delErrAcc = spark.sparkContext.longAccumulator("notion.deleteErrors")
-    existingDf
-      .join(df.select(col(keyCol).as("__k2")), col("__key") === col("__k2"),
-        "left_anti")
-      .foreachPartition { rows: Iterator[Row] =>
-        val limiter = new RateLimiter(minIntervalMs)
-        rows.foreach { r =>
-          limiter.acquire()
-          try {
-            Retry.withBackoff(3, 100L)(api.softDelete(r.getString(1)))
-            delAcc.add(1)
-          } catch { case _: Exception => delErrAcc.add(1) }
+    if (gone.nonEmpty)
+      spark.sparkContext
+        .parallelize(gone, math.min(gone.size, spark.sparkContext.defaultParallelism))
+        .foreachPartition { ids =>
+          val limiter = new RateLimiter(minIntervalMs)
+          ids.foreach { id =>
+            limiter.acquire()
+            try {
+              Retry.withBackoff(3, 100L)(api.softDelete(id))
+              delAcc.add(1)
+            } catch { case _: Exception => delErrAcc.add(1) }
+          }
         }
-      }
     WriteReport(okAcc.value, updAcc.value, delAcc.value,
-      errAcc.value + delErrAcc.value)
+      errAcc.value + delErrAcc.value, sameAcc.value)
   }
 
   object InMemoryNotionApi {
@@ -209,7 +264,11 @@ object NotionSink {
     override def createDatabase(name: String, properties: Map[String, String]): String =
       s"db-$name"
     override def existingRecords(): Map[Long, String] =
-      pages.asScala.collect { case (pid, (k, _, _)) => k -> pid }.toMap
+      existingPages().map { case (k, p) => k -> p.pageId }
+    override def existingPages(): Map[Long, ExistingPage] =
+      pages.asScala.map { case (pid, (k, props, active)) =>
+        k -> ExistingPage(pid, Some(props), active)
+      }.toMap
     override def insert(key: Long, properties: Map[String, String]): Unit = {
       if (failKeys(key))
         throw new RuntimeException(s"injected permanent failure for $key")
@@ -220,7 +279,9 @@ object NotionSink {
       maybeFail()
       val cur = pages.get(pageId)
       require(cur != null, s"unknown page $pageId")
-      pages.put(pageId, (cur._1, properties, cur._3))
+      // is_active is the page's flag, not a stored property
+      val active = properties.get("is_active").fold(cur._3)(_.toBoolean)
+      pages.put(pageId, (cur._1, properties - "is_active", active))
     }
     override def softDelete(pageId: String): Unit = {
       val cur = pages.get(pageId)

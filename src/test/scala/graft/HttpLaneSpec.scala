@@ -167,6 +167,7 @@ class HttpLaneSpec extends AnyFunSuite with SparkSpec {
     val pages = new java.util.LinkedHashMap[String, ObjectNodeBox]()
     val nextId = new AtomicLong()
     val insertAttempts = new AtomicInteger()
+    val patchRequests = new AtomicInteger()
     val queryRequests = new AtomicInteger()
     val databaseSchemas = new ConcurrentHashMap[String, JsonNode]()
     val parentPagesCreated = new AtomicInteger()
@@ -222,6 +223,7 @@ class HttpLaneSpec extends AnyFunSuite with SparkSpec {
             respond(x, 200, s"""{"id":"$id"}""")
           }
         } else if (x.getRequestMethod == "PATCH") {
+          patchRequests.incrementAndGet()
           val id = path.stripPrefix("/v1/pages/")
           val box = syncPages(pages.get(id))
           if (box == null) respond(x, 404, "{}")
@@ -270,11 +272,11 @@ class HttpLaneSpec extends AnyFunSuite with SparkSpec {
       val r1 = NotionSink.upsert(
         frame((1L, "孤独摇滚！", 8.1), (2L, "b", 9.0), (3L, "c", 3.0)),
         "subject_id", a)
-      assert(r1 === NotionSink.WriteReport(3, 0, 0, 0))
+      assert(r1 === NotionSink.WriteReport(3, 0, 0, 0, 0))
 
       val r2 = NotionSink.upsert(frame((1L, "a2", 1.5), (2L, "b", 9.0)),
         "subject_id", a)
-      assert(r2.updated === 2 && r2.softDeleted === 1 && r2.errors === 0)
+      assert(r2 === NotionSink.WriteReport(0, 1, 1, 0, 1))
 
       val byKey = stub.pages.asScala.values
         .map(b => stub.titleKey(b.props) -> b.props).toMap
@@ -327,9 +329,74 @@ class HttpLaneSpec extends AnyFunSuite with SparkSpec {
       a.createDatabase("db", Map("subject_id" -> "title"))
       val r = NotionSink.upsert(frame((1L, "a", 1.0), (2L, "b", 2.0)),
         "subject_id", a)
-      assert(r === NotionSink.WriteReport(2, 0, 0, 0))
+      assert(r === NotionSink.WriteReport(2, 0, 0, 0, 0))
       assert(stub.insertAttempts.get() === 4) // 2 rejected + 2 retried
       assert(stub.pages.asScala.size === 2)
+    }
+  }
+
+  test("re-running the same frame over HTTP sends no writes") {
+    val stub = new NotionStub()
+    withServer(stub.wire) { base =>
+      val a = api(base)
+      a.createDatabase("db", Map("subject_id" -> "title"))
+      val df = frame((1L, "a", 1.0), (2L, "b", 2.5), (3L, "c", 3.0))
+      NotionSink.upsert(df, "subject_id", a)
+      val inserts = stub.insertAttempts.get()
+      assert(NotionSink.upsert(df, "subject_id", a) ===
+        NotionSink.WriteReport(0, 0, 0, 0, 3))
+      assert(stub.patchRequests.get() === 0)
+      assert(stub.insertAttempts.get() === inserts)
+    }
+  }
+
+  test("over HTTP a re-added key comes back active; an inactive page is not soft-deleted again") {
+    val stub = new NotionStub()
+    withServer(stub.wire) { base =>
+      val a = api(base)
+      a.createDatabase("db", Map("subject_id" -> "title"))
+      val all = frame((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0))
+      val two = frame((1L, "a", 1.0), (2L, "b", 2.0))
+      NotionSink.upsert(all, "subject_id", a)
+      assert(NotionSink.upsert(two, "subject_id", a) ===
+        NotionSink.WriteReport(0, 0, 1, 0, 2))
+      assert(stub.patchRequests.get() === 1)
+      assert(NotionSink.upsert(two, "subject_id", a) ===
+        NotionSink.WriteReport(0, 0, 0, 0, 2))
+      assert(stub.patchRequests.get() === 1) // no second tombstone PATCH
+      assert(NotionSink.upsert(all, "subject_id", a) ===
+        NotionSink.WriteReport(0, 1, 0, 0, 2))
+      val byKey = stub.pages.asScala.values
+        .map(b => stub.titleKey(b.props) -> b.props).toMap
+      assert(byKey.values.forall(stub.isActive))
+      // is_active went out as a checkbox although propertyTypes lacks it
+      assert(byKey("3").path("is_active").path("checkbox").isBoolean)
+    }
+  }
+
+  test("every property type reads back unchanged through the HTTP stub") {
+    val stub = new NotionStub()
+    withServer(stub.wire) { base =>
+      val df = Seq((7L, "長" * 2500, 42, 8.1, 9.0, 1.0E-5, BigDecimal("1.50"),
+          java.sql.Timestamp.valueOf("2024-03-01 12:30:45"), true))
+        .toDF("subject_id", "summary", "eps", "score", "whole", "tiny",
+          "price", "updated_at", "nsfw")
+      val a = new HttpNotionApi(base, "secret-token", parentPageId = "parent-1",
+        propertyTypes = NotionSink.propertySchema(df.schema, "subject_id"))
+      a.createDatabase("db", NotionSink.propertySchema(df.schema, "subject_id"))
+      assert(NotionSink.upsert(df, "subject_id", a) ===
+        NotionSink.WriteReport(1, 0, 0, 0, 0))
+      // each property decodes to the string the sink formatted, except
+      // the decimal, which reads back as the JSON number it became
+      val page = a.existingPages()(7L)
+      val sent = NotionSink.formatProperties(df.head(), df.schema)
+      assert(page.active)
+      assert(page.properties.map(_ - "price") === Some(sent - "price"))
+      assert(sent("price").startsWith("1.500") &&
+        page.properties.get("price") === "1.5") // equal as numbers
+      assert(NotionSink.upsert(df, "subject_id", a) ===
+        NotionSink.WriteReport(0, 0, 0, 0, 1))
+      assert(stub.patchRequests.get() === 0)
     }
   }
 }

@@ -3,7 +3,7 @@ package graft
 import java.io.File
 import java.lang.reflect.{InvocationHandler, InvocationTargetException, Method, Proxy}
 import java.nio.file.Files
-import java.sql.{Connection, Driver, DriverPropertyInfo, SQLException}
+import java.sql.{Connection, Driver, DriverPropertyInfo, PreparedStatement, SQLException}
 import java.util.Properties
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -233,6 +233,97 @@ class JdbcLoadSpec extends AnyFunSuite with SparkSpec {
     assert(after === Map(1L -> 10.0, 2L -> 99.0, 4L -> 40.0))
   }
 
+  /** Rows of a table as sorted strings: a multiset compare. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val cols = df.columns.sorted
+    df.select(cols.map(org.apache.spark.sql.functions.col): _*)
+      .collect().map(_.toSeq.mkString("|")).toSeq.sorted
+  }
+
+  private val probe = classOf[InsertProbeDriver].getName
+
+  test("delta sync sends only the changed rows to the target") {
+    val v1 = (1L to 100L).map(i => (i, s"n$i", i * 1.5)).toDF("id", "name", "bal")
+    JdbcLoad.writeOverwrite(v1, url, "delta_src")
+    JdbcLoad.incrementalSync(spark, url, "delta_src", "delta_tgt", "id")
+    // v2: update 3, delete 2, insert 4, 95 unchanged
+    val v2 = (1L to 98L).map { i =>
+      (i, s"n$i", if (i <= 3) -1.0 else i * 1.5)
+    } ++ (201L to 204L).map(i => (i, s"new$i", 0.0))
+    JdbcLoad.writeOverwrite(v2.toDF("id", "name", "bal"), url, "delta_src")
+    InsertProbeDriver.reset("delta_tgt")
+    JdbcLoad.incrementalSync(spark, url, "delta_src", "delta_tgt", "id",
+      driver = probe)
+    assert(InsertProbeDriver.inserts.get() === 7) // 4 inserted + 3 updated
+    assert(InsertProbeDriver.deletes.get() === 5) // 3 updated + 2 deleted
+    assert(rowsOf(JdbcLoad.readTable(spark, url, "delta_tgt")) ===
+      rowsOf(v2.toDF("id", "name", "bal")))
+  }
+
+  test("delta sync leaves the target equal to SnapshotMerge.merge, null keys included") {
+    import graft.operators.SnapshotMerge
+    val ts = java.sql.Timestamp.valueOf("2024-01-02 03:04:05")
+    val j = java.lang.Long.valueOf(_: Long)
+    val cols = Seq("id", "name", "bal", "at")
+    val target = Seq[(java.lang.Long, String, java.lang.Double, java.sql.Timestamp)](
+      (j(1), "same", 1.0, ts), (j(2), "old", 2.0, null), (j(3), "gone", 3.0, ts),
+      (j(4), null, null, null), (null, "t-null", 9.0, ts)).toDF(cols: _*)
+    val source = Seq[(java.lang.Long, String, java.lang.Double, java.sql.Timestamp)](
+      (j(1), "same", 1.0, ts), (j(2), "new", null, ts), (j(4), null, null, null),
+      (j(5), "added", 5.0, null), (null, "s-null", 7.0, null),
+      (null, "s-null2", null, ts)).toDF(cols: _*)
+    JdbcLoad.writeOverwrite(target, url, "parity_tgt")
+    JdbcLoad.writeOverwrite(source, url, "parity_src")
+    val expected = rowsOf(SnapshotMerge.merge(
+      JdbcLoad.readTable(spark, url, "parity_src"),
+      JdbcLoad.readTable(spark, url, "parity_tgt"), "id").drop("is_active"))
+    InsertProbeDriver.reset("parity_tgt")
+    JdbcLoad.incrementalSync(spark, url, "parity_src", "parity_tgt", "id",
+      driver = probe)
+    assert(rowsOf(JdbcLoad.readTable(spark, url, "parity_tgt")) === expected)
+    // 2 updated/inserted keys + 2 source null-key rows; 1 and 4 untouched
+    assert(InsertProbeDriver.inserts.get() === 4)
+  }
+
+  test("a string key or a changed column set rewrites the target whole") {
+    import graft.operators.SnapshotMerge
+    // a string key lands as a CLOB on Derby, which a keyed DELETE cannot
+    // compare; a new source column is not in the target table
+    val t1 = Seq(("a", 1.0), ("b", 2.0)).toDF("code", "bal")
+    val s1 = Seq(("a", 1.0), ("b", 3.0), ("c", 4.0)).toDF("code", "bal")
+    val t2 = Seq((1L, 1.0), (2L, 2.0)).toDF("id", "bal")
+    val s2 = Seq((1L, 1.0, "x"), (3L, 3.0, "y")).toDF("id", "bal", "extra")
+    Seq(("strkey", t1, s1, "code"), ("newcol", t2, s2, "id")).foreach {
+      case (name, target, source, key) =>
+        JdbcLoad.writeOverwrite(target, url, s"${name}_tgt")
+        JdbcLoad.writeOverwrite(source, url, s"${name}_src")
+        val expected = rowsOf(SnapshotMerge.merge(source, target, key)
+          .drop("is_active"))
+        JdbcLoad.incrementalSync(spark, url, s"${name}_src", s"${name}_tgt", key)
+        assert(rowsOf(JdbcLoad.readTable(spark, url, s"${name}_tgt")) === expected)
+    }
+  }
+
+  test("a failure at the Nth INSERT of the apply leaves the old target unchanged") {
+    val old = (1L to 1500L).map(i => (java.lang.Long.valueOf(i), s"n$i", i * 1.0))
+      .:+((null: java.lang.Long, "t-null", 0.0)).toDF("id", "name", "bal")
+    JdbcLoad.writeOverwrite(old, url, "atomic_tgt")
+    // every row changes, so the first 1000-row batch of deletes and
+    // inserts has run when the 1200th INSERT row fails
+    val v2 = (1L to 1501L).map(i => (i, s"n$i", -i * 1.0)).toDF("id", "name", "bal")
+    JdbcLoad.writeOverwrite(v2, url, "atomic_src")
+    InsertProbeDriver.reset("atomic_tgt", failAt = 1200)
+    val e = intercept[Exception] {
+      JdbcLoad.incrementalSync(spark, url, "atomic_src", "atomic_tgt", "id",
+        driver = probe)
+    }
+    assert(e.getMessage.contains("injected"))
+    assert(rowsOf(JdbcLoad.readTable(spark, url, "atomic_tgt")) === rowsOf(old))
+    // the same sync on a healthy connection then publishes v2 whole
+    JdbcLoad.incrementalSync(spark, url, "atomic_src", "atomic_tgt", "id")
+    assert(rowsOf(JdbcLoad.readTable(spark, url, "atomic_tgt")) === rowsOf(v2))
+  }
+
   private def stageDirs(): Set[String] =
     Option(new File(System.getProperty("java.io.tmpdir")).list())
       .fold(Set.empty[String])(_.filter(_.startsWith("graft-jdbc-stage")).toSet)
@@ -242,6 +333,12 @@ class JdbcLoadSpec extends AnyFunSuite with SparkSpec {
     val before = stageDirs()
     JdbcLoad.incrementalSync(spark, url, "stage_src", "stage_tgt", "id")
     assert(JdbcLoad.readTable(spark, url, "stage_tgt").count() === 1)
+    // and a sync that rewrites the target whole (a new column), which
+    // stages the merge
+    JdbcLoad.writeOverwrite(Seq((1L, "b", 1.0), (2L, "c", 2.0))
+      .toDF("id", "name", "bal"), url, "stage_src")
+    JdbcLoad.incrementalSync(spark, url, "stage_src", "stage_tgt", "id")
+    assert(JdbcLoad.readTable(spark, url, "stage_tgt").count() === 2)
     assert(stageDirs() === before)
   }
 
@@ -301,4 +398,74 @@ final class FailingReadDriver extends Driver {
 
 object FailingReadDriver {
   val Table = "unreachable_tgt"
+}
+
+/** Derby connections that count the rows each prepared INSERT into, and
+  * DELETE from, [[InsertProbeDriver.table]] sends (one per `addBatch()`),
+  * and fail the [[InsertProbeDriver.failAt]]-th INSERT row (0: never) as
+  * a dropped connection would. Spark instantiates the driver by class
+  * name, so the settings and counts live in the companion. */
+final class InsertProbeDriver extends Driver {
+  private val derby = Class.forName(JdbcLoad.DerbyDriver)
+    .getDeclaredConstructor().newInstance().asInstanceOf[Driver]
+
+  private def proxy[T](iface: Class[T], target: AnyRef)(
+      before: (Method, Array[AnyRef]) => Unit): T =
+    Proxy.newProxyInstance(iface.getClassLoader, Array[Class[_]](iface),
+      new InvocationHandler {
+        def invoke(self: AnyRef, m: Method, args: Array[AnyRef]): AnyRef = {
+          before(m, args)
+          val r = try m.invoke(target,
+              (if (args == null) Array.empty[AnyRef] else args): _*)
+            catch { case e: InvocationTargetException => throw e.getCause }
+          (m.getName, r) match {
+            case ("prepareStatement", ps: PreparedStatement) =>
+              counted(ps, args(0).toString.toLowerCase)
+            case _ => r
+          }
+        }
+      }).asInstanceOf[T]
+
+  private def counted(ps: PreparedStatement, sql: String): AnyRef = {
+    import InsertProbeDriver._
+    val t = table.toLowerCase
+    val n =
+      if (sql.startsWith(s"insert into $t ")) Some(inserts)
+      else if (sql.startsWith(s"delete from $t ")) Some(deletes)
+      else None
+    n.fold[AnyRef](ps)(n => proxy(classOf[PreparedStatement], ps) { (m, args) =>
+      if (m.getName == "addBatch" && args == null) {
+        val k = n.incrementAndGet()
+        if ((n eq inserts) && k == failAt)
+          throw new SQLException("connection reset (injected)", "08006")
+      }
+    })
+  }
+
+  def connect(url: String, info: Properties): Connection = {
+    val c = derby.connect(url, info)
+    if (c == null) null else proxy(classOf[Connection], c)((_, _) => ())
+  }
+
+  def acceptsURL(url: String): Boolean = derby.acceptsURL(url)
+  def getPropertyInfo(url: String, info: Properties): Array[DriverPropertyInfo] =
+    derby.getPropertyInfo(url, info)
+  def getMajorVersion: Int = derby.getMajorVersion
+  def getMinorVersion: Int = derby.getMinorVersion
+  def jdbcCompliant: Boolean = false
+  def getParentLogger: java.util.logging.Logger = derby.getParentLogger
+}
+
+object InsertProbeDriver {
+  @volatile var table = ""
+  @volatile var failAt = 0L
+  val inserts = new java.util.concurrent.atomic.AtomicLong()
+  val deletes = new java.util.concurrent.atomic.AtomicLong()
+
+  def reset(t: String, failAt: Long = 0L): Unit = {
+    table = t
+    this.failAt = failAt
+    inserts.set(0)
+    deletes.set(0)
+  }
 }
