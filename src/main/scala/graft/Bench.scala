@@ -109,7 +109,7 @@ object Bench {
              fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-      catch { case e: Throwable =>
+      catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         return -1.0 // failures are sentineled, never fast successes
       }

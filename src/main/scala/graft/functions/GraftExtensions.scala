@@ -24,6 +24,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("simhash64"),
       new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
       (exprs: Seq[Expression]) => SimHash64(exprs.head)))
+    e.injectFunction((
+      FunctionIdentifier("minhash_sig"),
+      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
+      (exprs: Seq[Expression]) => MinHashSig(exprs(0),
+        GraftFunctions.intArg(exprs, 1), GraftFunctions.intArg(exprs, 2))))
+    e.injectFunction((
+      FunctionIdentifier("shingle_hashes"),
+      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
+      (exprs: Seq[Expression]) =>
+        ShingleHashes(exprs(0), GraftFunctions.intArg(exprs, 1))))
     // the same Catalyst bloom expressions GraftFunctions.register exposes
     e.injectFunction((
       FunctionIdentifier("graft_bloom_agg"),

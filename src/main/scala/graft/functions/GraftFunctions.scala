@@ -20,6 +20,12 @@ object GraftFunctions {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "simhash64", exprs => SimHash64(exprs.head), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "minhash_sig", exprs =>
+        MinHashSig(exprs(0), intArg(exprs, 1), intArg(exprs, 2)), "built-in")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "shingle_hashes", exprs =>
+        ShingleHashes(exprs(0), intArg(exprs, 1)), "built-in")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "nfc_normalize", exprs => NfcNormalize(exprs.head), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_dot", exprs => VecDot(exprs(0), exprs(1)), "built-in")
@@ -53,8 +59,15 @@ object GraftFunctions {
   private[functions] def intArg(
       exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
       i: Int, default: Int): Int =
-    if (exprs.length > i) exprs(i).eval().asInstanceOf[Number].intValue
-    else default
+    if (exprs.length > i) intArg(exprs, i) else default
+
+  /** The required constant int argument `i`. */
+  private[functions] def intArg(
+      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      i: Int): Int = {
+    require(exprs.length > i, s"missing constant int argument ${i + 1}")
+    exprs(i).eval().asInstanceOf[Number].intValue
+  }
 
   /** Flatten a Bangumi infobox JSON array into map<string,string> (F1). */
   def infobox_to_map(c: Column): Column = call_function("infobox_to_map", c)
@@ -67,6 +80,19 @@ object GraftFunctions {
 
   /** 64-bit SimHash of a token array as 16 hex chars (codegen'd kernel). */
   def simhash64(tokens: Column): Column = call_function("simhash64", tokens)
+
+  /** k-hash MinHash signature of a token array's word n-gram shingles, as
+    * md5 hex strings (codegen'd kernel; see [[MinHashSig]]). */
+  def minhash_sig(tokens: Column, n: Int, k: Int): Column =
+    call_function("minhash_sig", tokens,
+      org.apache.spark.sql.functions.lit(n),
+      org.apache.spark.sql.functions.lit(k))
+
+  /** xxhash64 of each word n-gram shingle of a token array (codegen'd
+    * kernel; see [[ShingleHashes]]). */
+  def shingle_hashes(tokens: Column, n: Int): Column =
+    call_function("shingle_hashes", tokens,
+      org.apache.spark.sql.functions.lit(n))
 
   /** Codegen'd dot product Σ a(i)·b(i) over two array<double> columns —
     * the same left-to-right IEEE fold as `aggregate(zip_with(a, b, _*_),

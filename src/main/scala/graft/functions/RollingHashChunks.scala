@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -65,7 +63,7 @@ object RollingHashChunks {
     var w = 0
     while (w < window) { bPow *= B; w += 1 }
     val bytes = input.getBytes
-    val md = MessageDigest.getInstance("MD5")
+    val md = Md5.get()
     val chunks = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
     var start = 0
     var h = 0L

@@ -50,27 +50,19 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 
 object SimHash64 {
 
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   /** Static kernel shared by eval and generated code (Janino calls the
     * companion's static forwarder). */
   def compute(tokens: ArrayData): UTF8String = {
     val counts = new Array[Int](64)
-    val md = digest.get()
+    val md = Md5.get()
     val n = tokens.numElements()
     var i = 0
     while (i < n) {
       val tok = tokens.getUTF8String(i)
       if (tok != null) {
-        md.reset()
-        val h = md.digest(tok.getBytes)
+        val h = md.digest(tok.getBytes) // digest() leaves md reset
         // first 8 digest bytes, big-endian = the first 16 hex chars of md5
-        var word = 0L
-        var b = 0
-        while (b < 8) { word = (word << 8) | (h(b) & 0xffL); b += 1 }
+        val word = Md5.word(h, 0)
         var j = 0
         while (j < 64) {
           if (((word >>> (63 - j)) & 1L) == 1L) counts(j) += 1 else counts(j) -= 1

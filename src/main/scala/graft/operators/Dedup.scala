@@ -11,7 +11,12 @@ import org.apache.spark.sql.functions._
   * results are reproducible across engines (and verifiable against a SQL
   * oracle). MinHash uses *lexicographic min over md5 strings* — a uniform
   * random permutation of the shingle space per seed, which is exactly the
-  * MinHash construction (Broder '97).
+  * MinHash construction (Broder '97). The per-document kernels
+  * `minhash_sig` and `shingle_hashes` (`graft.functions`) compute the same
+  * md5 and xxhash64 values the composed SQL forms (`min(md5(concat(
+  * "<seed>:", shingle)))`, `xxhash64(shingle)` over [[shingleRows]]) give —
+  * one narrow expression per row instead of one row per shingle — so the
+  * oracle SQL stays the composed form.
   *
   * Scale design (100 TB):
   *  - exact dedup = one hash-shuffle on the fingerprint; map-side partial
@@ -122,9 +127,12 @@ object Dedup {
     * than `n` tokens contribute their whole token sequence as one shingle.
     *
     * NOTE: this array form uses a higher-order `transform`, which Spark
-    * evaluates interpreted (no codegen) — fine for ad-hoc use, but the
-    * operator pipelines below all go through [[shingleRows]], which emits
-    * the identical multiset through codegen'd expressions ~12× faster.
+    * evaluates interpreted (no codegen) — fine for ad-hoc use. The operator
+    * pipelines below go through [[shingleRows]], which emits the identical
+    * multiset through codegen'd expressions ~12× faster, or, where only a
+    * hash of each shingle is needed, through the `minhash_sig` and
+    * `shingle_hashes` kernels, which compute the same md5/xxhash64 values
+    * per document without building the shingle strings.
     */
   def shingles(text: Column, n: Int): Column = {
     val t = TextAnalysis.tokens(text)
@@ -172,16 +180,12 @@ object Dedup {
       idCol: String,
       textCol: String,
       n: Int,
-      maxShingleDocFreq: Long = 0L,
-      distinct: Boolean = true): DataFrame = {
-    val exploded = shingleRows(df, idCol, textCol, n)
-    val base = if (distinct) exploded.distinct() else exploded
+      maxShingleDocFreq: Long = 0L): DataFrame = {
     // document frequency, not occurrence count: dedup (id, shingle) first
     // so the count is df and — unlike countDistinct over the multiset —
     // both the dedup and the count get map-side partial aggregation
-    withoutHotShingles(base,
-      if (distinct) base else exploded.distinct(),
-      maxShingleDocFreq)
+    val base = shingleRows(df, idCol, textCol, n).distinct()
+    withoutHotShingles(base, base, maxShingleDocFreq)
   }
 
   /** (shingle, df_) document frequencies of a distinct posting relation. */
@@ -373,15 +377,20 @@ object Dedup {
   /** The capped 64-bit-hashed distinct (id, shingle) relation both
     * containment paths (and the dispatcher's df statistic) share:
     * shingles leave the scan as xxhash64 longs (strings never cross an
-    * exchange), `maxShingleDocFreq` strips corpus-hot shingles. */
+    * exchange), `maxShingleDocFreq` strips corpus-hot shingles. The
+    * `shingle_hashes` kernel hashes each document's windows straight off
+    * its token bytes — the same values as `xxhash64` over [[shingleRows]],
+    * with no per-shingle string, zip or union branch. */
   private[graft] def cappedShingleHashes(
       df: DataFrame,
       idCol: String,
       textCol: String,
       n: Int,
       maxShingleDocFreq: Long): DataFrame = {
-    val hashed = shingleRows(df, idCol, textCol, n)
-      .select(col(idCol), xxhash64(col("shingle")).as("shingle"))
+    graft.functions.GraftFunctions.register(df.sparkSession)
+    val hashed = df.select(col(idCol),
+        explode(graft.functions.GraftFunctions.shingle_hashes(
+          TextAnalysis.tokens(col(textCol)), n)).as("shingle"))
       .distinct()
     withoutHotShingles(hashed, hashed, maxShingleDocFreq)
   }
@@ -754,15 +763,12 @@ object Dedup {
           .as("kept"))
   }
 
-  /** MinHash permutation value of a shingle for hash seed `seed`: md5 of the
-    * seeded shingle, compared lexicographically. */
-  def minhashOf(shingle: Column, seed: Int): Column =
-    md5(concat(lit(s"$seed:"), shingle))
-
   /** MinHash signatures: `numHashes` columns `mh0..mh{k-1}`, each the min
-    * seeded-md5 over the document's shingle set. One explode + one grouped
-    * aggregation (map-side partial min makes the shuffle tiny: k strings per
-    * doc).
+    * seeded md5 hex (`md5("<i>:" + shingle)`, compared lexicographically)
+    * over the document's shingle set. The `minhash_sig` kernel computes
+    * each row's k minima in one narrow pass over its shingles, so the
+    * grouping below sees one row per input row, not one per shingle; it
+    * only merges rows that share an id.
     */
   def minhashSignatures(
       df: DataFrame,
@@ -770,13 +776,13 @@ object Dedup {
       textCol: String,
       n: Int,
       numHashes: Int): DataFrame = {
-    // no distinct pass: min over the shingle multiset equals min over the
-    // set, so the dedup shuffle shingleSet pays is pure waste here — one
-    // explode feeding a map-side-combinable min aggregation
-    val sh = shingleSet(df, idCol, textCol, n, distinct = false)
+    graft.functions.GraftFunctions.register(df.sparkSession)
+    val sig = df.select(col(idCol), graft.functions.GraftFunctions.minhash_sig(
+        TextAnalysis.tokens(col(textCol)), n, numHashes).as("__sig"))
+      .filter(col("__sig").isNotNull)
     val aggs = (0 until numHashes).map(i =>
-      min(minhashOf(col("shingle"), i)).as(s"mh$i"))
-    sh.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
+      min(col("__sig").getItem(i)).as(s"mh$i"))
+    sig.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 
   /** One (id, band, key) row per signature band: the LSH bucketing keys,

@@ -176,8 +176,11 @@ object NotionSink {
           if (!row.isNullAt(joinedKeyIdx)) matchedAcc.add(row.getLong(joinedKeyIdx))
           try {
             if (row.isNullAt(joinedKeyIdx)) { // no __key → insert
+              // an unset checkbox reads back false on the real API, so a
+              // new page carries its flag, or the next sync re-activates it
               limiter.acquire()
-              Retry.withBackoff(3, 100L)(api.insert(row.getLong(keyIdx), props))
+              Retry.withBackoff(3, 100L)(api.insert(row.getLong(keyIdx),
+                props + ("is_active" -> "true")))
               okAcc.add(1)
             } else if (active && known &&
                 holds(props, row.getMap[String, String](propsIdx), numeric)) {
@@ -273,7 +276,9 @@ object NotionSink {
       if (failKeys(key))
         throw new RuntimeException(s"injected permanent failure for $key")
       maybeFail()
-      pages.put(s"page-$nextId", (key, properties, true))
+      // is_active is the page's flag, not a stored property
+      pages.put(s"page-$nextId", (key, properties - "is_active",
+        properties.get("is_active").forall(_.toBoolean)))
     }
     override def update(pageId: String, properties: Map[String, String]): Unit = {
       maybeFail()

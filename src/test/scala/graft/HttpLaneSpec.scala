@@ -162,9 +162,13 @@ class HttpLaneSpec extends AnyFunSuite with SparkSpec {
   /** Minimal Notion API stub: databases, cursor-paginated query, page
     * insert/patch — state lives in insertion order so pagination is
     * deterministic. `failFirstInserts` answers 429 to the first N
-    * `POST /v1/pages`. */
-  private class NotionStub(failFirstInserts: Int = 0) {
+    * `POST /v1/pages`. `unsetCheckboxReadsFalse` answers queries the way
+    * the real API does: a page whose `is_active` was never set reads back
+    * `{"checkbox": false}`. */
+  private class NotionStub(failFirstInserts: Int = 0,
+      unsetCheckboxReadsFalse: Boolean = false) {
     val pages = new java.util.LinkedHashMap[String, ObjectNodeBox]()
+    val insertBodies = new java.util.concurrent.ConcurrentLinkedQueue[JsonNode]()
     val nextId = new AtomicLong()
     val insertAttempts = new AtomicInteger()
     val patchRequests = new AtomicInteger()
@@ -196,7 +200,12 @@ class HttpLaneSpec extends AnyFunSuite with SparkSpec {
           val results = chunk.map { e =>
             val pg = mapper.createObjectNode()
             pg.put("id", e.getKey)
-            pg.set[JsonNode]("properties", e.getValue.props)
+            val props = e.getValue.props.deepCopy[JsonNode]()
+              .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+            if (unsetCheckboxReadsFalse && !props.has("is_active"))
+              props.set[JsonNode]("is_active",
+                mapper.createObjectNode().put("checkbox", false))
+            pg.set[JsonNode]("properties", props)
             mapper.writeValueAsString(pg)
           }
           val hasMore = from + 2 < all.size
@@ -218,6 +227,7 @@ class HttpLaneSpec extends AnyFunSuite with SparkSpec {
           } else if (insertAttempts.incrementAndGet() <= failFirstInserts)
             respond(x, 429, """{"error":"rate limited"}""")
           else {
+            insertBodies.add(body)
             val id = s"page-${nextId.incrementAndGet()}"
             syncPages(pages.put(id, ObjectNodeBox(body.get("properties"))))
             respond(x, 200, s"""{"id":"$id"}""")
@@ -347,6 +357,26 @@ class HttpLaneSpec extends AnyFunSuite with SparkSpec {
         NotionSink.WriteReport(0, 0, 0, 0, 3))
       assert(stub.patchRequests.get() === 0)
       assert(stub.insertAttempts.get() === inserts)
+    }
+  }
+
+  test("inserts send is_active = true, so a second identical sync sends no PATCH") {
+    val stub = new NotionStub(unsetCheckboxReadsFalse = true)
+    withServer(stub.wire) { base =>
+      val a = api(base)
+      a.createDatabase("db", Map("subject_id" -> "title"))
+      val df = frame((1L, "a", 1.0), (2L, "b", 2.5))
+      assert(NotionSink.upsert(df, "subject_id", a) ===
+        NotionSink.WriteReport(2, 0, 0, 0, 0))
+      assert(stub.insertBodies.size === 2)
+      stub.insertBodies.asScala.foreach { b =>
+        assert(mapper.writeValueAsString(b.path("properties").path("is_active")) ===
+          """{"checkbox":true}""")
+      }
+      // read back active, so the unchanged rows are skipped, not re-activated
+      assert(NotionSink.upsert(df, "subject_id", a) ===
+        NotionSink.WriteReport(0, 0, 0, 0, 2))
+      assert(stub.patchRequests.get() === 0)
     }
   }
 

@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.GraftFunctions
 import graft.operators.{AsofJoin, Dedup, Fusion, RangeJoin, Sampling, Similarity, TextAnalysis}
 
 /** Unit coverage for the training-data operators. */
@@ -52,10 +54,6 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     assert(capped.filter($"shingle".isin(hotShingles.toSeq: _*)).count() === 0)
     // survivors are exactly the non-hot shingles, for every doc
     assert(capped.count() === uncapped.count() - 5 * hotShingles.length)
-    // and the multiset (distinct=false) path prunes by doc-freq, not count
-    val cappedMulti = Dedup.shingleSet(hot, "doc_id", "text", 3,
-      maxShingleDocFreq = 3, distinct = false)
-    assert(cappedMulti.filter($"shingle".isin(hotShingles.toSeq: _*)).count() === 0)
   }
 
   test("short documents contribute a whole-text shingle") {
@@ -414,6 +412,79 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.linesIterator.exists(l =>
       l.contains("simhash64") && l.trim.stripPrefix(":- ").startsWith("*(")), plan)
+  }
+
+  /** The composed string forms the shingle kernels replaced, kept as the
+    * independent references they are checked against: per-shingle seeded
+    * md5 hex, min-aggregated per document, and xxhash64 of each shingle,
+    * both over [[Dedup.shingleRows]]. */
+  private def minhashOf(shingle: Column, seed: Int): Column =
+    md5(concat(lit(s"$seed:"), shingle))
+
+  private def minhashComposed(df: DataFrame, n: Int, k: Int): DataFrame = {
+    val aggs = (0 until k).map(i => min(minhashOf($"shingle", i)).as(s"mh$i"))
+    Dedup.shingleRows(df, "doc_id", "text", n)
+      .groupBy($"doc_id").agg(aggs.head, aggs.tail: _*)
+  }
+
+  private def shingleHashesComposed(df: DataFrame, n: Int): DataFrame =
+    Dedup.shingleRows(df, "doc_id", "text", n)
+      .select($"doc_id", xxhash64($"shingle").as("shingle"))
+
+  test("minhash_sig and shingle_hashes kernels are bit-identical to the composed forms") {
+    // real corpus slice plus the edge rows of the short-document rule:
+    // null / empty / whitespace-only text, fewer than n and exactly n
+    // tokens, repeated windows, CJK and Cyrillic, one id on two rows
+    val edge = Seq[(Long, Option[String])](
+      (9001L, None), (9002L, Some("")), (9003L, Some("   ")),
+      (9004L, Some("\t \n")), (9005L, Some("a")), (9006L, Some("a b")),
+      (9007L, Some("a b c")), (9008L, Some("a b a b a b a b")),
+      (9009L, Some("многоязычный 多语言 text 孤独摇滚！ ぼっち・ざ・ろっく")),
+      (9010L, Some("\tleading tab and  double  space")),
+      (9011L, Some("same id first row with words")),
+      (9011L, Some("same id second row")))
+      .toDF("doc_id", "text")
+    val docs = spark.read
+      .parquet("/root/testdata/sf0.001/documents.parquet")
+      .select($"doc_id", $"text")
+      .union(edge)
+    def sigs(df: DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> (1 until r.length).map(r.getString)).toMap
+    def hashes(df: DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+    for (n <- Seq(1, 2, 3)) {
+      for (k <- Seq(1, 8)) {
+        val viaKernel = sigs(Dedup.minhashSignatures(docs, "doc_id", "text", n, k))
+        assert(viaKernel === sigs(minhashComposed(docs, n, k)), s"n=$n k=$k")
+        assert(viaKernel.contains(9011L) && !viaKernel.contains(9001L))
+      }
+      // the multiset, duplicates included, and the operator's distinct set
+      GraftFunctions.register(spark)
+      val multiset = docs.select($"doc_id",
+        explode(GraftFunctions.shingle_hashes(TextAnalysis.tokens($"text"), n)))
+      assert(hashes(multiset) === hashes(shingleHashesComposed(docs, n)), s"n=$n")
+      assert(hashes(Dedup.cappedShingleHashes(docs, "doc_id", "text", n, 0L)) ===
+        hashes(shingleHashesComposed(docs, n).distinct()), s"n=$n")
+    }
+    // null elements (split never makes them): concat_ws skips them, and
+    // shingleRows' zip drops a window whose last token is null
+    val nulls = spark.sql("""SELECT
+      shingle_hashes(array('x', null, 'y'), 2) = array(xxhash64('y')),
+      shingle_hashes(array('x', null, 'y'), 3) = array(xxhash64('x y')),
+      minhash_sig(array('x', null, 'y'), 2, 1) = array(md5('0:y')),
+      minhash_sig(array('x', null), 2, 1) IS NULL""").head()
+    assert((0 until 4).forall(nulls.getBoolean))
+    // both kernels stay inside whole-stage codegen (no interpreted
+    // fallback): the operator evaluating each carries the `*(n)` marker
+    val tokens = TextAnalysis.tokens($"text")
+    for ((fn, q) <- Seq(
+        "minhash_sig" -> docs.select(GraftFunctions.minhash_sig(tokens, 3, 8)),
+        "shingle_hashes" -> docs.select(
+          explode(GraftFunctions.shingle_hashes(tokens, 3))))) {
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.linesIterator.exists(l => l.contains(fn) &&
+        l.trim.stripPrefix(":- ").stripPrefix("+- ").startsWith("*(")), plan)
+    }
   }
 
   test("cosine top-k ranks the identical vector first") {

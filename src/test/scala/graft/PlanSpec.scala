@@ -386,12 +386,13 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     // the shingle self-join must be an equi-join on the hashed shingle
     // key (never a cartesian), the (id_a, id_b) intersection count must
     // pre-combine map-side, and shingle STRINGS must not cross the wire —
-    // only xxhash64 fingerprints appear in the exchanges
+    // only xxhash64 fingerprints (the shingle_hashes kernel) appear in the
+    // exchanges
     val p = plan("q133_containment_pairs")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       p.take(800))
     assert(p.contains("partial_count"), "pair counts must combine map-side")
-    assert(p.contains("xxhash64"), "shingles must be hashed before exchange")
+    assert(p.contains("shingle_hashes"), "shingles must be hashed before exchange")
   }
 
   test("q135: prefix candidates equi-join hashed shingles; rarity rank sorts per doc") {
