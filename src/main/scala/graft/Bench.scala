@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.operators.Checkpoints
 object Bench {
 
   /** One JVM health sample (r18, verdict task 1: make the in-suite
@@ -61,16 +62,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to the full machine: the driver's contract is local[32] and it
-    // does not set SPARK_GRAFT_CPUS (a "4" default cost 5× in round 1's bench).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder(cpus)
       // r19 (verdict item 2, measured): the in-suite inflation mechanism
       // is codegen-cache thrash, not code-cache flushing. Spark's
       // generated-class cache (StaticSQLConf spark.sql.codegen.cache
@@ -110,40 +103,18 @@ object Bench {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
       catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        System.err.println(
+          s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
         return -1.0 // failures are sentineled, never fast successes
       }
       (System.nanoTime() - t0) / 1e9
-    }
-    // Between-query quiesce: the dedup/LSH queries localCheckpoint shared
-    // subtrees and never unpersist them, so blocks accumulate in the block
-    // manager across the suite — round 4 measured 2.5-4.7× inflation on
-    // late-alphabet queries (q49/q51) vs isolated reruns. Dropping leaked
-    // state (cache, persistent RDDs) and forcing a GC outside the timed
-    // region gives every query the same quiet JVM an isolated run sees.
-    def quiesce(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      // also clears the r17 tracked-checkpoint registry (the blanket
-      // unpersist above already freed the blocks; this drops the refs)
-      graft.operators.Checkpoints.releaseTracked()
-      // every streaming-query run loads fresh state-store providers into a
-      // JVM-wide cache whose maintenance tasks keep churning against dead
-      // checkpoints; unload them so later queries run against a quiet JVM
-      org.apache.spark.sql.GraftStateStoreBridge.unloadAllStateStores()
-      // terminated queries stay referenced by StreamingQueryManager (for
-      // awaitAnyTermination), pinning their final execution plans + progress
-      // — droppable heap the gc() below could not otherwise reclaim
-      spark.streams.resetTerminated()
-      System.gc()
     }
     // Full-suite WARM pass, unmeasured: min-of-2 alone was not enough —
     // rounds 2-3 showed 3-14× per-query inflation when both timed runs
     // execute before the JVM/codegen state from 50+ other queries settles
     // (C2 compilation storms, code-cache churn). One throwaway sweep lets
     // classloading + JIT reach steady state before any clock starts.
-    suite.foreach { case (name, fn) => once(name, fn); quiesce() }
+    suite.foreach { case (name, fn) => once(name, fn); Checkpoints.quiesce(spark) }
     // Timed: each query runs twice, report the min; raw pairs are kept so
     // residual inflation is diagnosable from the JSON alone. A JVM probe
     // after every lane's quiesce turns "late lanes read slow" from a
@@ -157,7 +128,7 @@ object Bench {
     val timed = suite.map { case (name, fn) =>
       val a = once(name, fn)
       val b = if (a >= 0) once(name, fn) else -1.0
-      quiesce()
+      Checkpoints.quiesce(spark)
       jvmSeries += ((name, jvmSample()))
       (name, a, b)
     }

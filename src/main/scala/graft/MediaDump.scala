@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Fixture dump for `tools/rederive_media.py`: writes the three synthetic
   * media tables' RAW PAYLOADS (media_id, kind, mime, content) to parquet so
   * the pure-Python re-derivation can decode them without any JVM. Only the
@@ -15,11 +13,7 @@ import org.apache.spark.sql.SparkSession
 object MediaDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/media_dump")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // the qb39 lane uses syntheticMedia(200); qb40 uses syntheticMedia(60),
     // an exact prefix of the same generation — one dump serves both

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates PLANS.md: `.explain("formatted")` of the headline queries at
   * sf0.01 — the evidence artifact for pushdown/pruning/broadcast/codegen
   * claims in OPERATORS.md. */
@@ -9,13 +7,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val out = sys.env.getOrElse("SPARK_GRAFT_PLANS_OUT", "/root/repo/PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val names = Seq("q04_filter_project", "q07_nation_revenue",
       "q01_pricing_summary", "q31_cosine_topk", "q26_jaccard_pairs",

@@ -1,6 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions.call_function
 
 /** Registration + Column wrappers for graft's custom Catalyst expressions.
@@ -11,60 +13,48 @@ import org.apache.spark.sql.functions.call_function
   */
 object GraftFunctions {
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "infobox_to_map", exprs => InfoboxToMap(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_chunks", exprs => RollingHashChunks(exprs.head,
-        intArg(exprs, 1, 16), intArg(exprs, 2, 6)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", exprs =>
-        MinHashSig(exprs(0), intArg(exprs, 1), intArg(exprs, 2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes", exprs =>
-        ShingleHashes(exprs(0), intArg(exprs, 1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => VecDot(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sqdist", exprs => VecL2Sq(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hilbert2d", exprs =>
-        HilbertIndex2D(exprs(0), exprs(1), intArg(exprs, 2, 16)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmin_values", exprs =>
-        KMinValues(exprs.head, intArg(exprs, 1, 256)).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmin_pairs", exprs =>
-        KMinPairs(exprs(0), exprs(1), intArg(exprs, 2, 256))
-          .toAggregateExpression(), "built-in")
+  /** Every graft SQL function: name → builder over the call's argument
+    * expressions. The one list both entry paths read —
+    * [[register]] (per session) and [[GraftExtensions]]
+    * (`spark.sql.extensions`). */
+  val table: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("infobox_to_map", exprs => InfoboxToMap(exprs.head)),
+    ("rolling_chunks", exprs => RollingHashChunks(exprs.head,
+      intArg(exprs, 1, 16), intArg(exprs, 2, 6))),
+    ("simhash64", exprs => SimHash64(exprs.head)),
+    ("minhash_sig", exprs =>
+      MinHashSig(exprs(0), intArg(exprs, 1), intArg(exprs, 2))),
+    ("shingle_hashes", exprs => ShingleHashes(exprs(0), intArg(exprs, 1))),
+    ("nfc_normalize", exprs => NfcNormalize(exprs.head)),
+    ("graft_dot", exprs => VecDot(exprs(0), exprs(1))),
+    ("graft_sqdist", exprs => VecL2Sq(exprs(0), exprs(1))),
+    ("graft_hilbert2d", exprs =>
+      HilbertIndex2D(exprs(0), exprs(1), intArg(exprs, 2, 16))),
+    ("kmin_values", exprs =>
+      KMinValues(exprs.head, intArg(exprs, 1, 256)).toAggregateExpression()),
+    ("kmin_pairs", exprs =>
+      KMinPairs(exprs(0), exprs(1), intArg(exprs, 2, 256))
+        .toAggregateExpression()),
     // Catalyst ships distributed bloom-filter expressions for its runtime
     // join filters but does not register them for users; exposing them
     // through the registry keeps the public-API-only Column path.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg", exprs =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-          .toAggregateExpression(), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_might_contain", exprs =>
-        org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
-  }
+    ("graft_bloom_agg", exprs =>
+      new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
+        .toAggregateExpression()),
+    ("graft_bloom_might_contain", exprs =>
+      BloomFilterMightContain(exprs(0), exprs(1))))
 
-  private[functions] def intArg(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-      i: Int, default: Int): Int =
+  def register(spark: SparkSession): Unit =
+    table.foreach { case (name, builder) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, builder, "built-in")
+    }
+
+  private def intArg(exprs: Seq[Expression], i: Int, default: Int): Int =
     if (exprs.length > i) intArg(exprs, i) else default
 
   /** The required constant int argument `i`. */
-  private[functions] def intArg(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-      i: Int): Int = {
+  private def intArg(exprs: Seq[Expression], i: Int): Int = {
     require(exprs.length > i, s"missing constant int argument ${i + 1}")
     exprs(i).eval().asInstanceOf[Number].intValue
   }

@@ -10,75 +10,64 @@ import org.apache.spark.sql.execution.LogicalRDD
   *
   * Operators here checkpoint shared subtrees (pair generators reuse the
   * quantizer assignment on both self-join sides; iterative graph loops
-  * re-seed each round) and historically never unpersisted them — the
-  * blocks accumulate in the block manager for the life of the session
-  * (round-4 measured 2.5–4.7× timing inflation on late lanes, which is
-  * why `graft.Bench` quiesces between queries). A long-lived production
-  * session composing many operator calls has no quiesce; this object is
-  * the scoped lifecycle that closes the leak (r16 verdict, defect 5):
+  * re-seed each round). `localCheckpoint` TRUNCATES lineage, so a
+  * checkpoint's blocks are the only copy of its data, and left alone
+  * they accumulate in the block manager for the life of the session
+  * (round-4 measured 2.5–4.7× timing inflation on late lanes). The API:
   *
+  *  - [[trackedEager]] — acquire an operator-internal checkpoint: eager
+  *    `localCheckpoint`, registered for [[releaseTracked]]. Identity
+  *    under [[planCaptureMode]], so evidence dumps see the operator tree.
+  *  - [[trackedEagerPinned]] — the same for loop-carried frames; it
+  *    truncates even under [[planCaptureMode]].
   *  - [[release]] — free ONE checkpoint's blocks once nothing can read
-  *    through it. `localCheckpoint` TRUNCATES lineage, so its blocks are
-  *    the only copy: releasing a checkpoint that a still-lazy result
-  *    depends on makes that result unrecomputable. Iterative operators
-  *    ([[Components.alternatingStars]], [[Components.hostPagerank]]) call
-  *    this on generation n−1 once generation n is eagerly materialized —
-  *    the rolling form of acquire → use → unpersist, which turns
-  *    O(rounds) leaked generations into O(1).
-  *  - [[track]]/[[releaseTracked]] — the session-hygiene form for
-  *    checkpoints that must OUTLIVE their operator call (a pair
-  *    generator's assignment relation feeds the lazily-returned pair
-  *    DataFrame, so the operator itself can never free it without
-  *    forcing materialization and rewriting every pinned plan). Pair
-  *    generators register their internal checkpoints; a long-lived
-  *    session calls `releaseTracked()` between logical queries — after
-  *    materializing the previous query's results, the same contract as
-  *    Bench's quiesce — and frees exactly the operator-internal blocks
-  *    without touching user-managed caches.
-  *  - [[releaseAll]] — the blanket sweep (every persistent RDD), what
-  *    Bench's quiesce does; for sessions that own their SparkContext.
+  *    through it. Iterative operators ([[Components.alternatingStars]],
+  *    [[Components.hostPagerank]]) call this on generation n−1 once
+  *    generation n is materialized — the rolling form of acquire → use →
+  *    unpersist, which keeps O(1) generations alive instead of O(rounds).
+  *  - [[releaseTracked]] — free every tracked checkpoint. A pair
+  *    generator's checkpoint feeds the lazily returned pair DataFrame, so
+  *    the operator itself can never free it; a long-lived session calls
+  *    this between logical queries, after materializing the previous
+  *    query's results, and user-managed caches stay untouched.
+  *  - [[quiesce]] — the between-lanes sweep of a session that owns its
+  *    SparkContext (`graft.Bench`, `LaneProfile`, `PlanSnap`): every
+  *    persistent RDD, the tracked registry, state stores and terminated
+  *    queries, then a GC.
   *
-  * All releases are `blocking = false`: removal is asynchronous and the
-  * caller never waits on the block manager.
+  * Both acquire forms are eager: a lazy checkpoint in a rolling-release
+  * loop materializes from already-released blocks
+  * (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, the r19 q98/q101 failure). All
+  * releases except [[quiesce]]'s are `blocking = false`.
   */
 object Checkpoints {
 
   /** r19 evidence hook (set ONLY by `graft.tools.PlanSnap`): when true,
-    * operator-internal localCheckpoints taken through [[cp]] /
-    * [[trackedEager]] become identity, so a final-frame
-    * `.explain("formatted")` shows the full operator tree instead of the
-    * `Scan ExistingRDD` a checkpoint truncates it to (the r18 plan dumps
-    * were before/after byte-identical for exactly this reason). Never
-    * set in query/bench/verify paths: without truncation, iterative
-    * loops re-derive every prior round (O(rounds²) work) and plans grow
-    * unboundedly — this is an evidence switch, not an execution mode. */
+    * checkpoints taken through [[trackedEager]] become identity, so a
+    * final-frame `.explain("formatted")` shows the full operator tree
+    * instead of the `Scan ExistingRDD` a checkpoint truncates it to (the
+    * r18 plan dumps were before/after byte-identical for exactly this
+    * reason). Never set in query/bench/verify paths: without truncation,
+    * iterative loops re-derive every prior round (O(rounds²) work) and
+    * plans grow unboundedly — this is an evidence switch, not an
+    * execution mode. */
   @volatile private[graft] var planCaptureMode = false
 
-  /** `df.localCheckpoint(eager)` gated on [[planCaptureMode]] — operators
-    * checkpoint through this so evidence dumps can see through the
-    * lineage truncation. Identity (plan-preserving) under capture.
-    * `eager` defaults to TRUE to match `Dataset.localCheckpoint()` — the
-    * call sites this helper replaced; a lazy default silently breaks
-    * rolling-release loops (release old generation → lazy new generation
-    * materializes from released blocks → CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND,
-    * the r19 q98/q101 failure). */
-  private[graft] def cp(df: DataFrame, eager: Boolean = true): DataFrame =
-    if (planCaptureMode) df else df.localCheckpoint(eager)
+  /** Operator-internal checkpoint: eager `localCheckpoint`, registered
+    * for [[releaseTracked]]; identity under [[planCaptureMode]]. The
+    * chainable form is `df.transform(Checkpoints.trackedEager)`. */
+  private[graft] def trackedEager(df: DataFrame): DataFrame =
+    if (planCaptureMode) df else track(df.localCheckpoint(eager = true))
 
-  /** Loop-carried checkpoint: ALWAYS truncates, even under
-    * [[planCaptureMode]]. Iterative frames reference their predecessor
-    * several times per round (symmetrize = 2 reads, the fixpoint diff a
-    * third), so an untruncated loop plan grows exponentially and the
-    * ANALYZER hangs before any task runs — measured: the r19 see-through
-    * dump of q63 sat >10 min at sf0.001 in plan analysis. Loop lanes
-    * inevitably explain as `Scan ExistingRDD`; their plan evidence is the
-    * loop INPUT subtree, captured through the non-loop lanes that share
-    * it. */
-  private[graft] def cpPinned(df: DataFrame, eager: Boolean = true): DataFrame =
-    df.localCheckpoint(eager)
-
-  /** [[trackedEager]]'s always-truncating twin for loop frames — see
-    * [[cpPinned]]. */
+  /** Loop-carried checkpoint: like [[trackedEager]] but ALWAYS truncates,
+    * even under [[planCaptureMode]]. Iterative frames reference their
+    * predecessor several times per round (symmetrize = 2 reads, the
+    * fixpoint diff a third), so an untruncated loop plan grows
+    * exponentially and the ANALYZER hangs before any task runs —
+    * measured: the r19 see-through dump of q63 sat >10 min at sf0.001 in
+    * plan analysis. Loop lanes inevitably explain as `Scan ExistingRDD`;
+    * their plan evidence is the loop INPUT subtree, captured through the
+    * non-loop lanes that share it. */
   private[graft] def trackedEagerPinned(df: DataFrame): DataFrame =
     track(df.localCheckpoint(eager = true))
 
@@ -103,27 +92,19 @@ object Checkpoints {
     new java.util.concurrent.ConcurrentHashMap[Integer, WeakReference[RDD[_]]]()
 
   /** Register `df`'s checkpoint blocks for [[releaseTracked]] and return
-    * it unchanged — the acquire half of the session-hygiene lifecycle;
-    * plan-neutral (the DataFrame itself is untouched). */
-  private[graft] def track(df: DataFrame): DataFrame = {
+    * it unchanged (plan-neutral). */
+  private def track(df: DataFrame): DataFrame = {
     checkpointRdds(df).foreach(r => tracked.put(r.id, new WeakReference(r)))
     df
   }
 
-  /** Chainable acquire: `df.transform(Checkpoints.trackedEager)` ≡
-    * eager localCheckpoint + [[track]] — the one-line adoption form for
-    * operator-internal shared subtrees. */
-  private[graft] def trackedEager(df: DataFrame): DataFrame =
-    if (planCaptureMode) df else track(df.localCheckpoint(eager = true))
-
-  /** How many tracked checkpoints are currently registered (diagnostic —
-    * the 50-query growth measurement reads this next to the block
-    * manager's own RDD count). */
+  /** How many tracked checkpoints are currently registered (diagnostic,
+    * read by the lifecycle spec). */
   def trackedCount: Int = tracked.size()
 
   /** Free every operator-internal checkpoint registered since the last
     * call. Call between logical queries in a long-lived session, AFTER
-    * materializing the previous query's results (the Bench-quiesce
+    * materializing the previous query's results (the [[quiesce]]
     * contract): the released blocks are unrecoverable by design.
     *
     * ONE-ACTION-WINDOW CONTRACT (also documented on every operator
@@ -145,12 +126,28 @@ object Checkpoints {
     }
   }
 
-  /** The blanket sweep: every persistent RDD in the session's context
-    * (operator checkpoints, user caches, everything) plus the tracked
-    * registry. What `graft.Bench`'s quiesce does between lanes. */
-  def releaseAll(spark: SparkSession): Unit = {
+  /** Between-lanes quiesce for a session that owns its SparkContext: the
+    * dedup/LSH lanes leave checkpoint blocks behind, and round 4
+    * measured 2.5-4.7× inflation on late-alphabet lanes (q49/q51) against
+    * isolated reruns. Dropping that state (caches, persistent RDDs, the
+    * tracked registry) and forcing a GC outside the timed region gives
+    * every lane the same quiet JVM an isolated run sees. Frees user
+    * caches too — never call it from a session you share. */
+  def quiesce(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+      .foreach(_.unpersist(blocking = true))
+    // the blanket unpersist above already freed the blocks; this drops
+    // the registry's refs
     releaseTracked()
+    // every streaming-query run loads fresh state-store providers into a
+    // JVM-wide cache whose maintenance tasks keep churning against dead
+    // checkpoints; unload them so later lanes run against a quiet JVM
+    org.apache.spark.sql.GraftStateStoreBridge.unloadAllStateStores()
+    // terminated queries stay referenced by StreamingQueryManager (for
+    // awaitAnyTermination), pinning their final execution plans + progress
+    // — droppable heap the gc() below could not otherwise reclaim
+    spark.streams.resetTerminated()
+    System.gc()
   }
 }

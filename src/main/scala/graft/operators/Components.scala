@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * Checkpoint lifecycle: intermediate generations are rolling-released
   * ([[Checkpoints.release]]) inside the loop; the FINAL generation backing
   * the returned frame (and [[hostPagerank]]'s tracked internals) is
-  * registered with [[Checkpoints.track]], so
+  * taken through [[Checkpoints.trackedEagerPinned]], so
   * `Checkpoints.releaseTracked()` frees it irreversibly — materialize the
   * result BEFORE calling it (the one-action-window contract documented on
   * [[Checkpoints]]).

@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   *  - nothing collects to the driver; every stage is a Dataset transform.
   *
   * Checkpoint lifecycle: the pair/band generators here return LAZY frames
-  * backed by operator-internal `localCheckpoint` blocks registered with
-  * [[Checkpoints.track]]. `Checkpoints.releaseTracked()` frees those
+  * backed by operator-internal `localCheckpoint` blocks taken through
+  * [[Checkpoints.trackedEager]]. `Checkpoints.releaseTracked()` frees those
   * blocks irreversibly (lineage is truncated) — after it runs, a
   * previously returned frame cannot be re-executed (a second action fails
   * with block-not-found). One-action-window contract: materialize every

@@ -106,7 +106,7 @@ object QualityFilter {
   def fit(docs: DataFrame, idCol: String, textCol: String, label: Column,
       rounds: Int = 12, lr: Double = 0.5): Model = {
     require(rounds >= 1, "rounds must be >= 1")
-    val sig = signals(docs, idCol, textCol, label).transform(Checkpoints.cp(_, eager = true))
+    val sig = signals(docs, idCol, textCol, label).transform(Checkpoints.trackedEager)
     val n = sig.count()
     require(n > 0, "cannot fit on an empty corpus")
     val nd = lit(n.toDouble)
@@ -123,7 +123,7 @@ object QualityFilter {
     val sdRow = sig.agg(sdExprs.head, sdExprs.tail: _*).head()
     val sd = FeatureNames.indices.map(i =>
       if (sdRow.getDouble(i) == 0.0) 1.0 else sdRow.getDouble(i))
-    val z = zFrame(sig, mu, sd).transform(Checkpoints.cp(_, eager = true))
+    val z = zFrame(sig, mu, sd).transform(Checkpoints.trackedEager)
     // Dataset.unpersist is a cache-manager call and a NO-OP for
     // checkpoint blocks (the plan is a LogicalRDD, never registered
     // there) — release through the RDD, or the blocks live forever

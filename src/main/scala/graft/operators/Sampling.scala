@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   *    pruning into the scan stage.
   *
   * Checkpoint lifecycle: the ranked-join entries return LAZY frames backed
-  * by operator-internal `localCheckpoint` blocks registered with
-  * [[Checkpoints.track]]; `Checkpoints.releaseTracked()` frees those
+  * by operator-internal `localCheckpoint` blocks taken through
+  * [[Checkpoints.trackedEager]]; `Checkpoints.releaseTracked()` frees those
   * blocks irreversibly, so materialize every result you still need BEFORE
   * calling it (the one-action-window contract documented on
   * [[Checkpoints]]).

@@ -20,12 +20,13 @@ import org.apache.spark.sql.functions._
   * (`aggregate(zip_with(...))`) — deterministic and engine-portable.
   *
   * Checkpoint lifecycle: the ANN / pair-generator entries return LAZY
-  * frames backed by operator-internal `localCheckpoint` blocks registered
-  * with [[Checkpoints.track]]. `Checkpoints.releaseTracked()` frees those
-  * blocks irreversibly — a second action on an already-materialized result
-  * then fails with block-not-found. One-action-window contract:
-  * materialize (or re-checkpoint) every result you still need BEFORE
-  * calling `releaseTracked()` between logical queries.
+  * frames backed by operator-internal `localCheckpoint` blocks taken
+  * through [[Checkpoints.trackedEager]]. `Checkpoints.releaseTracked()`
+  * frees those blocks irreversibly — a second action on an
+  * already-materialized result then fails with block-not-found.
+  * One-action-window contract: materialize (or re-checkpoint) every
+  * result you still need BEFORE calling `releaseTracked()` between
+  * logical queries.
   */
 object Similarity {
 
@@ -681,11 +682,6 @@ object Similarity {
           .as("cell"))
   }
 
-  /** Diagnostic-visible alias of [[residuals]] (graft.tools.CellDiag). */
-  private[graft] def residualsDiag(
-      c: DataFrame,
-      coarse: Array[(Int, Seq[Double])]): DataFrame = residuals(c, coarse)
-
   /** Residuals (v − assignedCentroid) for fine-quantizer TRAINING — the
     * relation [[kmeansCentroids]] samples from; lazily recomputed by
     * [[assignCellsTwoLevel]] at assignment time (both are scan-stage). */
@@ -1308,9 +1304,8 @@ object Similarity {
       maxFlatCells: Int = MaxFlatCells): DataFrame = {
     ensureFns(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val assigned = Checkpoints.track(
-      autoAssignCells(c, nCentroids, targetCellSize, maxFlatCells)
-        .transform(Checkpoints.cp(_)))
+    val assigned = autoAssignCells(c, nCentroids, targetCellSize, maxFlatCells)
+      .transform(Checkpoints.trackedEager)
     val dropped = cosinePairs(assigned, "cell", threshold)
       .select(col("id_b").as("id")).distinct()
       .withColumn("__hit", lit(1))
@@ -1675,9 +1670,8 @@ object Similarity {
       targetCellSize: Int,
       maxFlatCells: Int): DataFrame = {
     require(nProbe >= 1, "nProbe >= 1")
-    val assigned = Checkpoints.track(
-      autoAssignCellsTopK(c, nCentroids, targetCellSize, maxFlatCells,
-        nProbe).transform(Checkpoints.cp(_)))
+    val assigned = autoAssignCellsTopK(c, nCentroids, targetCellSize,
+      maxFlatCells, nProbe).transform(Checkpoints.trackedEager)
     cosinePairs(assigned, "cell", threshold).distinct()
   }
 
@@ -1687,9 +1681,8 @@ object Similarity {
       nCentroids: Int,
       targetCellSize: Int,
       maxFlatCells: Int): DataFrame = {
-    val assigned = Checkpoints.track(
-      autoAssignCells(c, nCentroids, targetCellSize, maxFlatCells)
-        .transform(Checkpoints.cp(_)))
+    val assigned = autoAssignCells(c, nCentroids, targetCellSize, maxFlatCells)
+      .transform(Checkpoints.trackedEager)
     cosinePairs(assigned, "cell", threshold)
   }
 
@@ -1832,9 +1825,8 @@ object Similarity {
       cellProbes: Int = DefaultCellProbes,
       srpProbes: Int = DefaultSrpProbes): DataFrame = {
     ensureFns(corpus.sparkSession)
-    val c = Checkpoints.track(
-      corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-        .transform(Checkpoints.cp(_, eager = true)))
+    val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
+      .transform(Checkpoints.trackedEager)
     val conc = srpBucketConcentration(c, "id", "v", nPlanes, dim, seed,
       targetBucketSize, maxPlanesPerLevel)
     if (conc >= zipfConcentration) {
@@ -1877,9 +1869,8 @@ object Similarity {
       targetBucketSize: Int = 64,
       targetCellSize: Int = 64): DataFrame = {
     ensureFns(corpus.sparkSession)
-    val c = Checkpoints.track(
-      corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-        .transform(Checkpoints.cp(_, eager = true)))
+    val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
+      .transform(Checkpoints.trackedEager)
     val srp = embeddingNearDupPairs(c, "id", "v", threshold, nPlanes, dim,
       seed, targetBucketSize)
     val cell = cellNearDupPairsFrom(c, threshold, nCentroids = 0,
@@ -1939,9 +1930,8 @@ object Similarity {
       cellProbes: Int = 1,
       srpProbes: Int = 1): DataFrame = {
     ensureFns(corpus.sparkSession)
-    val c = Checkpoints.track(
-      corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-        .transform(Checkpoints.cp(_, eager = true)))
+    val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
+      .transform(Checkpoints.trackedEager)
     val truePairs = exactCosinePairs(c, threshold)
     val srp =
       if (srpProbes <= 1)
@@ -2007,9 +1997,8 @@ object Similarity {
       measureRecall: Boolean = false,
       zipfConcentration: Double = 3.0): DataFrame = {
     ensureFns(corpus.sparkSession)
-    val c = Checkpoints.track(
-      corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-        .transform(Checkpoints.cp(_, eager = true)))
+    val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
+      .transform(Checkpoints.trackedEager)
     val p = autoPlanesTwoLevel(c.count(), targetBucketSize, MaxAutoPlanes)
     val planes = hyperplanes(p, dim, seed)
     // ONE bucket projection feeds both the concentration statistic and
@@ -2047,7 +2036,7 @@ object Similarity {
     val assignedRaw = autoAssignCells(c, 0, targetCellSize, MaxFlatCells)
     val assigned =
       if (measureRecall)
-        Checkpoints.track(assignedRaw.transform(Checkpoints.cp(_)))
+        assignedRaw.transform(Checkpoints.trackedEager)
       else assignedRaw
     val cellStats = assigned
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
@@ -2249,9 +2238,9 @@ object Similarity {
       else autoPlanesTwoLevel(corpus.count(), targetBucketSize,
         maxPlanesPerLevel)
     val planes = hyperplanes(p, dim, seed)
-    val c = Checkpoints.track(probedSrpBuckets(
+    val c = probedSrpBuckets(
       corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v")),
-      planes, math.min(nProbes, p + 1)).transform(Checkpoints.cp(_)))
+      planes, math.min(nProbes, p + 1)).transform(Checkpoints.trackedEager)
     cosinePairs(c, "bucket", threshold).distinct()
   }
 

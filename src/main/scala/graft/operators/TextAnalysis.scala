@@ -17,7 +17,7 @@ case class DeflateRatio(doc_id: Long, n_bytes: Int, n_deflated: Int,
   *
   * Checkpoint lifecycle: a few entries (kn-language bands, the BM25 /
   * sketch rollup pairs) return LAZY frames backed by operator-internal
-  * `localCheckpoint` blocks registered with [[Checkpoints.track]];
+  * `localCheckpoint` blocks taken through [[Checkpoints.trackedEager]];
   * `Checkpoints.releaseTracked()` frees those blocks irreversibly, so
   * materialize every result you still need BEFORE calling it (the
   * one-action-window contract documented on [[Checkpoints]]).
@@ -289,7 +289,7 @@ object TextAnalysis {
       .select(col("wcnt"),
         transform(sequence(lit(1), length(col("w"))),
           i => col("w").substr(i, lit(1))).as("syms"))
-      .transform(Checkpoints.cpPinned(_))
+      .transform(Checkpoints.trackedEagerPinned)
     var ck = wf // the live checkpointed generation (rolling release)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var r = 0
@@ -327,7 +327,7 @@ object TextAnalysis {
           // rolling release (Checkpoints lifecycle): the new eager
           // checkpoint is the only reader of the old one — O(1) live
           // checkpointed generations instead of rounds/4
-          val next = wf.transform(Checkpoints.cpPinned(_))
+          val next = wf.transform(Checkpoints.trackedEagerPinned)
           Checkpoints.release(ck)
           ck = next
           wf = next
@@ -449,10 +449,10 @@ object TextAnalysis {
     require(seedSize >= vocabSize && vocabSize >= 1 && rounds >= 1)
     val spark = df.sparkSession
     import spark.implicits._
-    val wf = Checkpoints.track( // returned join reads wf via segCounts
-      df.select(explode(preTokens(col(textCol))).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).as("wcnt"))
-        .transform(Checkpoints.cp(_)))
+    val wf = df // returned join reads wf via segCounts
+      .select(explode(preTokens(col(textCol))).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("wcnt"))
+      .transform(Checkpoints.trackedEager)
     // bounded collect: ≤ k multi-char pieces + the character alphabet
     def keepTop(counts: DataFrame, k: Int): Seq[String] = {
       val chars = counts.filter(length(col("piece")) === 1)
@@ -622,7 +622,7 @@ object TextAnalysis {
     import spark.implicits._
     val wf = df.select(explode(preTokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("wcnt"))
-      .transform(Checkpoints.cp(_))
+      .transform(Checkpoints.trackedEager)
     val subs = wf.select(col("wcnt"),
       explode(flatten(transform(sequence(lit(1), length(col("w"))), i =>
         transform(sequence(i, least(length(col("w")), i + lit(maxPieceLen - 1))),
@@ -1162,10 +1162,9 @@ object TextAnalysis {
     // re-derives the whole KN scoring pipeline — six corpus scans in the
     // physical plan instead of two. One narrow row per doc, so the
     // materialization is corpus-cardinality but thin.
-    val scored = Checkpoints.track( // feeds the returned band join too
-      knBigramScore(df, idCol, textCol, discount)
-        .join(df.select(col(idCol), col(langCol)), Seq(idCol))
-        .transform(Checkpoints.cp(_, eager = true)))
+    val scored = knBigramScore(df, idCol, textCol, discount)
+      .join(df.select(col(idCol), col(langCol)), Seq(idCol))
+      .transform(Checkpoints.trackedEager) // feeds the returned band join too
     val qd = Quantiles.histogramQuantiles(
       scored, langCol, "avg_logprob", Seq(0.25, 0.5, 0.75), 256)
     val thr = qd.groupBy(col(langCol)).agg(
@@ -1449,9 +1448,8 @@ object TextAnalysis {
         explode(bigramPairs(col("ts"))).as("pp"))
       .select(col(coarseCol), col(fineCol),
         concat_ws(" ", col("pp.w1"), col("pp.w2")).as("term"))
-    val fine = Checkpoints.track( // both returned rollups read it
-      hllRegisters(terms, Seq(coarseCol, fineCol), "term", p)
-        .transform(Checkpoints.cp(_)))
+    val fine = hllRegisters(terms, Seq(coarseCol, fineCol), "term", p)
+      .transform(Checkpoints.trackedEager) // both returned rollups read it
     val mergedCoarse = fine.groupBy(col(coarseCol), col("bucket"))
       .agg(max(col("reg")).as("reg"))
     val mergedAll = fine.groupBy(col("bucket"))
@@ -1589,8 +1587,8 @@ object TextAnalysis {
       .select(col(groupCol), explode(bigramPairs(col("ts"))).as("pp"))
       .select(col(groupCol),
         concat_ws(" ", col("pp.w1"), col("pp.w2")).as("term"))
-    val sk = Checkpoints.track( // both returned slices read it
-      kmvSketch(terms, groupCol, "term", k).transform(Checkpoints.cp(_, eager = true)))
+    val sk = kmvSketch(terms, groupCol, "term", k)
+      .transform(Checkpoints.trackedEager) // both returned slices read it
     kmvOverlap(sk.filter(col(groupCol) === groupA),
       sk.filter(col(groupCol) === groupB), k)
   }
@@ -1607,8 +1605,8 @@ object TextAnalysis {
       .select(col(groupCol), explode(bigramPairs(col("ts"))).as("pp"))
       .select(col(groupCol),
         concat_ws(" ", col("pp.w1"), col("pp.w2")).as("term"))
-    val sk = Checkpoints.track( // both returned slices read it
-      kmvSketch(terms, groupCol, "term", k).transform(Checkpoints.cp(_, eager = true)))
+    val sk = kmvSketch(terms, groupCol, "term", k)
+      .transform(Checkpoints.trackedEager) // both returned slices read it
     kmvSetAlgebra(sk.filter(col(groupCol) === groupA),
       sk.filter(col(groupCol) === groupB), k)
   }

@@ -15,9 +15,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * tiebreakers) so results are reproducible across cluster sizes.
   *
   * Checkpoint lifecycle: [[globalRowNumber]] returns a LAZY frame backed
-  * by an operator-internal `localCheckpoint` registered with
-  * [[Checkpoints.track]]; `Checkpoints.releaseTracked()` frees the blocks
-  * irreversibly, so materialize the result BEFORE calling it (the
+  * by an operator-internal `localCheckpoint` taken through
+  * [[Checkpoints.trackedEager]]; `Checkpoints.releaseTracked()` frees the
+  * blocks irreversibly, so materialize the result BEFORE calling it (the
   * one-action-window contract documented on [[Checkpoints]]).
   */
 object Windows {
@@ -87,11 +87,10 @@ object Windows {
     require(!df.columns.contains(rankCol),
       s"rank column '$rankCol' already exists in ${df.columns.mkString(",")}")
     val spark = df.sparkSession
-    val ranged = Checkpoints.track( // the returned RDD-derived frame
-      df                            // reads these blocks lazily
-        .repartitionByRange(orderCols: _*)
-        .sortWithinPartitions(orderCols: _*)
-        .transform(Checkpoints.cp(_)))
+    val ranged = df // the returned RDD-derived frame reads these blocks lazily
+      .repartitionByRange(orderCols: _*)
+      .sortWithinPartitions(orderCols: _*)
+      .transform(Checkpoints.trackedEager)
     val ranked = ranged.rdd.zipWithIndex().map { case (r, i) =>
       Row.fromSeq(r.toSeq :+ (i + 1L))
     }
@@ -129,11 +128,10 @@ object Windows {
     require(!df.columns.contains("__psval"),
       "input frame must not contain reserved column __psval")
     val spark = df.sparkSession
-    val ranged = Checkpoints.track(
-      df.withColumn("__psval", valueCol.cast(LongType))
-        .repartitionByRange(orderCols: _*)
-        .sortWithinPartitions(orderCols: _*)
-        .transform(Checkpoints.cp(_)))
+    val ranged = df.withColumn("__psval", valueCol.cast(LongType))
+      .repartitionByRange(orderCols: _*)
+      .sortWithinPartitions(orderCols: _*)
+      .transform(Checkpoints.trackedEager)
     val vIdx = ranged.schema.fieldIndex("__psval")
     // bounded collect: one (partition, total) pair per partition
     val totals = ranged.rdd.mapPartitionsWithIndex { case (i, it) =>

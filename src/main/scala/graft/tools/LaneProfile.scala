@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** r18 measurement harness (optimization guide §1): run any declared
   * lane under a SparkListener and decompose its wall clock into
   * scheduled work (jobs, stages, summed executor task time) vs driver
@@ -17,8 +15,7 @@ import org.apache.spark.sql.SparkSession
 object LaneProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
+    val cpus = graft.GraftSession.cpus
     val lanes = sys.env.getOrElse("SPARK_GRAFT_LANES", "")
       .split(",").map(_.trim).filter(_.nonEmpty)
     // SPARK_GRAFT_SQLCONF="k=v;k=v": arbitrary extra confs for config
@@ -26,11 +23,7 @@ object LaneProfile {
     val extraConf = sys.env.getOrElse("SPARK_GRAFT_SQLCONF", "")
       .split(";").map(_.trim).filter(_.contains("="))
       .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val spark = extraConf.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true"))(
+    val spark = extraConf.foldLeft(graft.GraftSession.builder(cpus))(
       (b, kv) => b.config(kv._1, kv._2))
       // SPARK_GRAFT_HOLD: keep the session (and its UI) alive after the
       // lanes finish so the SQL tab's per-operator metrics can be read
@@ -73,20 +66,11 @@ object LaneProfile {
         System.err.println(s"[laneprofile] warm-up load of $t failed: $e")
       }
     }
-    def quiesce(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      graft.operators.Checkpoints.releaseTracked()
-      org.apache.spark.sql.GraftStateStoreBridge.unloadAllStateStores()
-      spark.streams.resetTerminated()
-      System.gc()
-    }
     lanes.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       // warm pass, unmeasured
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      quiesce()
+      graft.operators.Checkpoints.quiesce(spark)
       for (rep <- 1 to 2) {
         jobs.set(0); stages.set(0); tasks.set(0); taskTimeMs.set(0)
         stageRows.clear()
@@ -109,7 +93,7 @@ object LaneProfile {
           f"construct=${(t1 - t0) / 1e9}%.2f plan=${(t2 - t1) / 1e9}%.2f " +
           f"exec=${(t3 - t2) / 1e9}%.2f jobs=${jobs.get} " +
           f"stages=${stages.get} tasks=${tasks.get} " +
-          f"summedTaskSec=$taskSec%.1f idealParSec=${taskSec / cpus.toInt}%.2f")
+          f"summedTaskSec=$taskSec%.1f idealParSec=${taskSec / cpus}%.2f")
         // top stages by summed task time — where the CPU-seconds live
         import scala.jdk.CollectionConverters._
         stageRows.asScala.toSeq.sortBy(-_.runMs).take(12).foreach { s =>
@@ -127,7 +111,7 @@ object LaneProfile {
                 l.contains("Similarity") || l.contains("SparkEntry"))
               .take(6).mkString(" | "))
         }
-        quiesce()
+        graft.operators.Checkpoints.quiesce(spark)
       }
     }
     sys.env.get("SPARK_GRAFT_HOLD").foreach { s =>

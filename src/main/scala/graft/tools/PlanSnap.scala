@@ -1,11 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Evidence tool: write `.explain("formatted")` of named lanes to
   * one file per lane (plans/<round>/<lane>_<tag>.txt) — the before/after
   * plan record OPTIMIZATION_r<n>.md's claims point at. Same session
-  * shape as the Bench (sf from env, cpus from env).
+  * as the Bench ([[graft.GraftSession]], sf from env).
   *
   * r19: dumps run with [[graft.operators.Checkpoints.planCaptureMode]]
   * ON by default — operator-internal localCheckpoints become identity,
@@ -20,21 +18,14 @@ import org.apache.spark.sql.SparkSession
 object PlanSnap {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
+    val cpus = graft.GraftSession.cpus
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r19")
     val seeThrough = !sys.env.contains("SPARK_GRAFT_PLAN_TRUNCATED")
     graft.operators.Checkpoints.planCaptureMode = seeThrough
     val lanes = sys.env.getOrElse("SPARK_GRAFT_LANES", "")
       .split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     lanes.foreach { name =>
@@ -51,10 +42,7 @@ object PlanSnap {
         java.nio.file.Paths.get(outDir, s"${name}_$tag.txt"),
         (header + plan).getBytes("UTF-8"))
       println(s"[plansnap] wrote $outDir/${name}_$tag.txt (Exchange x$nEx)")
-      graft.operators.Checkpoints.releaseTracked()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      graft.operators.Checkpoints.quiesce(spark)
     }
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev measurement (r17, verdict task 5): pin the heap-vs-RocksDB
@@ -33,13 +32,8 @@ object StateScale {
     val nKeys = sys.env.getOrElse("SPARK_GRAFT_STATE_KEYS", "6000000").toLong
     val nFiles = sys.env.getOrElse("SPARK_GRAFT_STATE_FILES", "16").toInt
     val shards = sys.env.getOrElse("SPARK_GRAFT_STATE_SHARDS", "4").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shards)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder()
+      .config("spark.sql.shuffle.partitions", shards.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -4,14 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared local session for suites (one per JVM via getOrCreate). */
 trait SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftSession.builder(4).appName("graft-test").getOrCreate()
 
   /** Run `body` with the given SQL confs set, restoring previous values. */
   def withSQLConf[A](pairs: (String, String)*)(body: => A): A = {

@@ -147,5 +147,15 @@ class SurfacesSpec extends AnyFunSuite with SparkSpec {
       .head()
     assert(flat.getMap[String, String](0).get("导演").contains("斎藤圭一郎"))
     assert(flat.getInt(1) > 0)
+
+    // 'Cafe' + U+0301 (combining acute), composed by NFC to 'Café'
+    val kern = spark.sql(
+      """SELECT nfc_normalize(decode(unhex('43616665CC81'), 'UTF-8')) AS nfc,
+        |       graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS dot""".stripMargin)
+      .head()
+    assert(kern.getString(0) === "Caf\u00e9")
+    assert(kern.getDouble(1) === 11.0)
+    val kmin = spark.sql("SELECT kmin_values(id % 7, 3) AS k FROM range(50)").head()
+    assert(kmin.getSeq[Long](0) === Seq(0L, 1L, 2L))
   }
 }
