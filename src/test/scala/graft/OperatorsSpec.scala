@@ -1349,31 +1349,43 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
   test("Checkpoints: release frees blocks; releaseTracked frees operator internals only") {
     import spark.implicits._
     import graft.operators.Checkpoints
+    // Persistent RDDs are tracked by id, not by count: Spark's
+    // ContextCleaner unpersists RDDs that earlier tests left unreferenced
+    // whenever the JVM collects them, so a session-wide count can drop
+    // in the middle of this test.
+    def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
     // release(df) drops exactly the checkpoint's persistent RDD
-    val n0 = spark.sparkContext.getPersistentRDDs.size
+    val before = persisted()
     val cp = Seq(1, 2, 3).toDF("x").localCheckpoint(eager = true)
-    assert(spark.sparkContext.getPersistentRDDs.size === n0 + 1)
+    val cpIds = persisted() -- before
+    assert(cpIds.size === 1)
     Checkpoints.release(cp)
-    assert(spark.sparkContext.getPersistentRDDs.size === n0,
+    assert((persisted() & cpIds).isEmpty,
       "release must unpersist the checkpoint's RDD")
     // a pair-generator call registers its internal checkpoints; a USER
     // checkpoint (the input below) is untouched by releaseTracked
     Checkpoints.releaseTracked()
     val rnd = new scala.util.Random(7)
+    val beforeUser = persisted()
     val e = (0 until 200).map(i =>
       (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding").localCheckpoint(eager = true)
-    val base = spark.sparkContext.getPersistentRDDs.size
+    val userIds = persisted() -- beforeUser
+    assert(userIds.size === 1)
+    val base = persisted()
     Similarity.cellNearDupPairs(e, "vec_id", "embedding", 0.9,
       targetCellSize = 16)
       .write.format("noop").mode("overwrite").save()
     assert(Checkpoints.trackedCount >= 1,
       "the pair generator must register its internal checkpoint")
-    assert(spark.sparkContext.getPersistentRDDs.size > base)
+    val internal = persisted() -- base
+    assert(internal.nonEmpty)
     Checkpoints.releaseTracked()
     assert(Checkpoints.trackedCount === 0)
-    assert(spark.sparkContext.getPersistentRDDs.size === base,
-      "releaseTracked must free exactly the operator-internal blocks")
+    assert((persisted() & internal).isEmpty,
+      "releaseTracked must free the operator-internal blocks")
+    assert(userIds.subsetOf(persisted()),
+      "releaseTracked must leave the user's checkpoint alone")
     Checkpoints.release(e)
   }
 
