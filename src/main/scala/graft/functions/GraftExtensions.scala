@@ -12,8 +12,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =
-    GraftFunctions.table.foreach { case (name, builder) =>
+    GraftFunctions.table.foreach { case (name, cls, builder) =>
       e.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(builder.getClass.getName, name), builder))
+        new ExpressionInfo(cls.getName, name), builder))
     }
 }

@@ -13,39 +13,41 @@ import org.apache.spark.sql.functions.call_function
   */
 object GraftFunctions {
 
-  /** Every graft SQL function: name → builder over the call's argument
-    * expressions. The one list both entry paths read —
+  /** Every graft SQL function: name, the expression class it builds
+    * (what `DESCRIBE FUNCTION` reports), and the builder over the call's
+    * argument expressions. The one list both entry paths read —
     * [[register]] (per session) and [[GraftExtensions]]
     * (`spark.sql.extensions`). */
-  val table: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    ("infobox_to_map", exprs => InfoboxToMap(exprs.head)),
-    ("rolling_chunks", exprs => RollingHashChunks(exprs.head,
-      intArg(exprs, 1, 16), intArg(exprs, 2, 6))),
-    ("simhash64", exprs => SimHash64(exprs.head)),
-    ("minhash_sig", exprs =>
+  val table: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("infobox_to_map", classOf[InfoboxToMap], exprs => InfoboxToMap(exprs.head)),
+    ("rolling_chunks", classOf[RollingHashChunks], exprs =>
+      RollingHashChunks(exprs.head, intArg(exprs, 1, 16), intArg(exprs, 2, 6))),
+    ("simhash64", classOf[SimHash64], exprs => SimHash64(exprs.head)),
+    ("minhash_sig", classOf[MinHashSig], exprs =>
       MinHashSig(exprs(0), intArg(exprs, 1), intArg(exprs, 2))),
-    ("shingle_hashes", exprs => ShingleHashes(exprs(0), intArg(exprs, 1))),
-    ("nfc_normalize", exprs => NfcNormalize(exprs.head)),
-    ("graft_dot", exprs => VecDot(exprs(0), exprs(1))),
-    ("graft_sqdist", exprs => VecL2Sq(exprs(0), exprs(1))),
-    ("graft_hilbert2d", exprs =>
+    ("shingle_hashes", classOf[ShingleHashes], exprs =>
+      ShingleHashes(exprs(0), intArg(exprs, 1))),
+    ("nfc_normalize", classOf[NfcNormalize], exprs => NfcNormalize(exprs.head)),
+    ("graft_dot", classOf[VecDot], exprs => VecDot(exprs(0), exprs(1))),
+    ("graft_sqdist", classOf[VecL2Sq], exprs => VecL2Sq(exprs(0), exprs(1))),
+    ("graft_hilbert2d", classOf[HilbertIndex2D], exprs =>
       HilbertIndex2D(exprs(0), exprs(1), intArg(exprs, 2, 16))),
-    ("kmin_values", exprs =>
+    ("kmin_values", classOf[KMinValues], exprs =>
       KMinValues(exprs.head, intArg(exprs, 1, 256)).toAggregateExpression()),
-    ("kmin_pairs", exprs =>
+    ("kmin_pairs", classOf[KMinPairs], exprs =>
       KMinPairs(exprs(0), exprs(1), intArg(exprs, 2, 256))
         .toAggregateExpression()),
     // Catalyst ships distributed bloom-filter expressions for its runtime
     // join filters but does not register them for users; exposing them
     // through the registry keeps the public-API-only Column path.
-    ("graft_bloom_agg", exprs =>
+    ("graft_bloom_agg", classOf[BloomFilterAggregate], exprs =>
       new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
         .toAggregateExpression()),
-    ("graft_bloom_might_contain", exprs =>
+    ("graft_bloom_might_contain", classOf[BloomFilterMightContain], exprs =>
       BloomFilterMightContain(exprs(0), exprs(1))))
 
   def register(spark: SparkSession): Unit =
-    table.foreach { case (name, builder) =>
+    table.foreach { case (name, _, builder) =>
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "built-in")
     }

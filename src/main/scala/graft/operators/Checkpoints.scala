@@ -21,15 +21,23 @@ import org.apache.spark.sql.execution.LogicalRDD
   *  - [[trackedEagerPinned]] — the same for loop-carried frames; it
   *    truncates even under [[planCaptureMode]].
   *  - [[release]] — free ONE checkpoint's blocks once nothing can read
-  *    through it. Iterative operators ([[Components.alternatingStars]],
-  *    [[Components.hostPagerank]]) call this on generation n−1 once
+  *    through it, and drop its registry entry. Iterative operators
+  *    ([[Components.alternatingStars]], [[Components.hostPagerank]],
+  *    `TextAnalysis.bpeTrain`) call this on generation n−1 once
   *    generation n is materialized — the rolling form of acquire → use →
   *    unpersist, which keeps O(1) generations alive instead of O(rounds).
+  *    Operators that finish with a checkpoint inside the call
+  *    (`QualityFilter.fit`, `TextAnalysis.unigramTrain`) release it the
+  *    same way.
   *  - [[releaseTracked]] — free every tracked checkpoint. A pair
   *    generator's checkpoint feeds the lazily returned pair DataFrame, so
   *    the operator itself can never free it; a long-lived session calls
   *    this between logical queries, after materializing the previous
-  *    query's results, and user-managed caches stay untouched.
+  *    query's results, and user-managed caches stay untouched. The
+  *    registry is JVM-wide and every acquire registers, including the
+  *    checkpoints an operator releases itself before returning: a
+  *    `releaseTracked` that runs concurrently with such an operator call
+  *    (another thread on a shared session) frees its blocks mid-call.
   *  - [[quiesce]] — the between-lanes sweep of a session that owns its
   *    SparkContext (`graft.Bench`, `LaneProfile`, `PlanSnap`): every
   *    persistent RDD, the tracked registry, state stores and terminated
@@ -84,7 +92,10 @@ object Checkpoints {
     * checkpoint has been eagerly materialized — lineage is truncated, so
     * the blocks are the only copy of the data. */
   def release(df: DataFrame): Unit =
-    checkpointRdds(df).foreach(_.unpersist(blocking = false))
+    checkpointRdds(df).foreach { r =>
+      tracked.remove(r.id)
+      r.unpersist(blocking = false)
+    }
 
   /** Operator-internal checkpoints registered for deferred release —
     * weak refs so an unpersisted-by-GC RDD never pins heap here. */

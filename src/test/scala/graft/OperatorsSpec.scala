@@ -1349,29 +1349,38 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
   test("Checkpoints: release frees blocks; releaseTracked frees operator internals only") {
     import spark.implicits._
     import graft.operators.Checkpoints
-    // Persistent RDDs are tracked by id, not by count: Spark's
-    // ContextCleaner unpersists RDDs that earlier tests left unreferenced
-    // whenever the JVM collects them, so a session-wide count can drop
-    // in the middle of this test.
+    // Persistent RDDs are followed by id, not by a session-wide count:
+    // Spark's ContextCleaner unpersists RDDs that earlier tests left
+    // unreferenced whenever the JVM collects them, so the count can drop
+    // in the middle of this test. The sentinel checkpoints below stay
+    // referenced until the end, so the cleaner cannot touch them, and
+    // each release must leave every one of them persisted.
     def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def checkpointIds(df: => org.apache.spark.sql.DataFrame)
+        : (org.apache.spark.sql.DataFrame, Set[Int]) = {
+      val before = persisted()
+      val out = df
+      val ids = persisted() -- before
+      assert(ids.size === 1, "localCheckpoint must add one persistent RDD")
+      (out, ids)
+    }
     // release(df) drops exactly the checkpoint's persistent RDD
-    val before = persisted()
-    val cp = Seq(1, 2, 3).toDF("x").localCheckpoint(eager = true)
-    val cpIds = persisted() -- before
-    assert(cpIds.size === 1)
+    val (cp, cpIds) = checkpointIds(Seq(1, 2, 3).toDF("x").localCheckpoint(eager = true))
+    val (keep, keepIds) = checkpointIds(Seq(4, 5).toDF("y").localCheckpoint(eager = true))
     Checkpoints.release(cp)
     assert((persisted() & cpIds).isEmpty,
       "release must unpersist the checkpoint's RDD")
+    assert(keepIds.subsetOf(persisted()),
+      "release must leave every other checkpoint alone")
     // a pair-generator call registers its internal checkpoints; a USER
     // checkpoint (the input below) is untouched by releaseTracked
     Checkpoints.releaseTracked()
+    assert(keepIds.subsetOf(persisted()),
+      "releaseTracked must leave untracked checkpoints alone")
     val rnd = new scala.util.Random(7)
-    val beforeUser = persisted()
-    val e = (0 until 200).map(i =>
+    val (e, userIds) = checkpointIds((0 until 200).map(i =>
       (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
-      .toDF("vec_id", "embedding").localCheckpoint(eager = true)
-    val userIds = persisted() -- beforeUser
-    assert(userIds.size === 1)
+      .toDF("vec_id", "embedding").localCheckpoint(eager = true))
     val base = persisted()
     Similarity.cellNearDupPairs(e, "vec_id", "embedding", 0.9,
       targetCellSize = 16)
@@ -1384,10 +1393,18 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     assert(Checkpoints.trackedCount === 0)
     assert((persisted() & internal).isEmpty,
       "releaseTracked must free the operator-internal blocks")
-    assert(userIds.subsetOf(persisted()),
-      "releaseTracked must leave the user's checkpoint alone")
+    assert((userIds ++ keepIds).subsetOf(persisted()),
+      "releaseTracked must free only the operator-internal blocks")
+    // release of a tracked checkpoint also drops its registry entry
+    val tracked = Checkpoints.trackedEager(Seq(6).toDF("z"))
+    assert(Checkpoints.trackedCount === 1)
+    Checkpoints.release(tracked)
+    assert(Checkpoints.trackedCount === 0,
+      "release must drop the registry entry of a tracked checkpoint")
     Checkpoints.release(e)
+    Checkpoints.release(keep)
   }
+
 
   test("iterative components hold O(1) checkpointed generations") {
     import spark.implicits._

@@ -27,6 +27,11 @@ class GraftExtensionsSpec extends AnyFunSuite {
       registry.functionExists(FunctionIdentifier(n)))
     assert(missing.isEmpty, s"not injected: ${missing.toSeq.sorted}")
     assert(GraftFunctions.table.map(_._1).toSet === expectedNames)
+    // DESCRIBE FUNCTION reports the expression class, not the builder's
+    GraftFunctions.table.foreach { case (name, cls, _) =>
+      assert(registry.lookupFunction(FunctionIdentifier(name))
+        .map(_.getClassName) === Some(cls.getName), name)
+    }
 
     // an aggregate builder wraps its function in an AggregateExpression
     // with a fresh result id; compare the function itself
@@ -35,7 +40,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       case other => other
     }
     val args = Seq(Literal("a"), Literal(3), Literal(4))
-    GraftFunctions.table.foreach { case (name, builder) =>
+    GraftFunctions.table.foreach { case (name, _, builder) =>
       val resolved = registry.lookupFunction(FunctionIdentifier(name), args)
       assert(core(resolved) === core(builder(args)), name)
     }
