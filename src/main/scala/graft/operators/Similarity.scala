@@ -319,11 +319,12 @@ object Similarity {
   private[graft] def cosS(a: IndexedSeq[Double], b: IndexedSeq[Double]): Double =
     dotS(a, b) / (normS(a) * normS(b))
 
-  // Primitive-array mirrors of dotS/normS/l2S with the SAME IEEE op
-  // order (same seeds, same strict left-to-right adds) — the generic
-  // IndexedSeq folds box every element access, and at training work
-  // ~1e12 score units that boxing dominated the measured r17 train
-  // times. Bit-identity to the boxed forms is spec-gated.
+  // Primitive-array kernels: dotP/normP mirror dotS/normS with the SAME
+  // IEEE op order (same seeds, same strict left-to-right adds), and l2P
+  // is squared L2 in that form — the generic IndexedSeq folds box every
+  // element access, and at training work ~1e12 score units that boxing
+  // dominated the measured r17 train times. Bit-identity to the boxed
+  // forms is spec-gated.
   private[graft] def dotP(a: Array[Double], b: Array[Double]): Double = {
     var acc = a(0) * b(0); var i = 1
     while (i < a.length) { acc += a(i) * b(i); i += 1 }
@@ -731,13 +732,6 @@ object Similarity {
   }
 
   // ---- product quantization (PQ / ADC) ---------------------------------
-
-  private[graft] def l2S(a: IndexedSeq[Double], b: IndexedSeq[Double]): Double = {
-    var acc = { val d = a(0) - b(0); d * d }
-    var i = 1
-    while (i < a.length) { val d = a(i) - b(i); acc += d * d; i += 1 }
-    acc
-  }
 
   /** Per-subspace PQ codebooks (Jégou et al. '11): split the vector into
     * `m` contiguous subspaces and run the SAME deterministic sampled
@@ -2283,10 +2277,8 @@ object Similarity {
     val scored = c.join(q, Seq("bucket"))
       .filter(col("id") =!= col("q_id"))
       .select(col("q_id"), col("id"), cosine(col("v"), col("qv")).as("sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Windows.topKPerGroup(scored, Seq(col("q_id")),
+      Seq(col("sim").desc, col("id").asc), k, "rank")
       .select(col("q_id"), col("id"), col("rank"),
         round(col("sim"), 6).as("sim"))
   }
@@ -2341,19 +2333,15 @@ object Similarity {
       .select(col("q_id"), col("id"),
         (bit_count(col("hi").bitwiseXOR(col("qhi"))) +
           bit_count(col("lo").bitwiseXOR(col("qlo")))).as("hd"))
-    val wH = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("hd").asc, col("id").asc)
-    val cand = shortlist.withColumn("hrn", row_number().over(wH))
-      .filter(col("hrn") <= k * rerankFactor)
+    val cand = Windows.topKPerGroup(shortlist, Seq(col("q_id")),
+        Seq(col("hd").asc, col("id").asc), k * rerankFactor, "hrn")
       .select(col("q_id"), col("id"))
     val scored = cand
       .join(codes.select(col("id"), col("v")), Seq("id"))
       .join(broadcast(q.select(col("q_id"), col("qv"))), Seq("q_id"))
       .select(col("q_id"), col("id"), cosine(col("v"), col("qv")).as("sim"))
-    val wS = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(wS))
-      .filter(col("rank") <= k)
+    Windows.topKPerGroup(scored, Seq(col("q_id")),
+      Seq(col("sim").desc, col("id").asc), k, "rank")
       .select(col("q_id"), col("id"), col("rank"),
         round(col("sim"), 6).as("sim"))
   }

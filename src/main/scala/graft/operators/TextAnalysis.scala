@@ -1048,11 +1048,8 @@ object TextAnalysis {
       .crossJoin(broadcast(stats))
       .select(col(idCol), col("term"),
         round(col("tf") * log(col("n_docs") / col("df_")), 6).as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol))
-      .orderBy(col("score").desc, col("term").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Windows.topKPerGroup(scored, Seq(col(idCol)),
+      Seq(col("score").desc, col("term").asc), k, "rank")
   }
 
   /** Interpolated Kneser–Ney bigram score per document — the production
@@ -1511,31 +1508,17 @@ object TextAnalysis {
     * |A∪B| ≈ (k−1)·2^52/u_k, EXACT when the merged set has fewer than k
     * values (both sides fully captured); Jaccard = fraction of the union
     * k-min present in BOTH sketches; intersection = J·|A∪B|. Every input
-    * is sketch-sized, so the single-partition window is bounded by 2k. */
-  def kmvOverlap(a: DataFrame, b: DataFrame, k: Int = 256): DataFrame = {
-    // one double literal computed HERE (same for the oracle): (k-1)·2^52
-    val numer = (k - 1).toDouble * 4503599627370496.0
-    val merged = a.select(col("v")).union(b.select(col("v"))).distinct()
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("v"))
-    val kmin = merged.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .join(a.select(col("v"), lit(1).as("ina")), Seq("v"), "left_outer")
-      .join(b.select(col("v"), lit(1).as("inb")), Seq("v"), "left_outer")
-    val agg = kmin.agg(
-      count(lit(1)).as("n"),
-      max(col("v")).as("u_k"),
-      sum(when(col("ina") === 1 && col("inb") === 1, 1L).otherwise(0L))
-        .as("n_both"))
-    val estUnion = when(col("n") < k, col("n").cast("double"))
-      .otherwise(lit(numer) / col("u_k").cast("double"))
-    agg.select(
-      col("n"), col("n_both"),
-      round(estUnion, 4).as("est_union"),
+    * is sketch-sized, so the single-partition window is bounded by 2k.
+    * A projection of [[kmvSetAlgebra]], which builds the k-min. */
+  def kmvOverlap(a: DataFrame, b: DataFrame, k: Int = 256): DataFrame =
+    overlapOf(kmvSetAlgebra(a, b, k))
+
+  /** (n, n_both, est_union, est_jaccard, est_inter) of a set-algebra row. */
+  private def overlapOf(alg: DataFrame): DataFrame =
+    alg.select(col("n"), col("n_both"), col("est_union"),
       round(col("n_both").cast("double") / col("n").cast("double"), 6)
         .as("est_jaccard"),
-      round((col("n_both").cast("double") / col("n").cast("double")) *
-        estUnion, 4).as("est_inter"))
-  }
+      col("est_inter"))
 
   /** Full theta-sketch set algebra from two KMV sketches: [[kmvOverlap]]'s
     * union/Jaccard/intersection plus the DIFFERENCE estimates |A∖B| and
@@ -1579,23 +1562,13 @@ object TextAnalysis {
     * much does crawl A overlap crawl B?" — would otherwise cost a
     * distinct-join of both corpora. */
   def kmvBigramOverlap(df: DataFrame, groupCol: String, textCol: String,
-      groupA: String, groupB: String, k: Int = 256): DataFrame = {
-    val terms = df
-      .filter(col(groupCol).isin(groupA, groupB))
-      .select(col(groupCol), tokens(lower(col(textCol))).as("ts"))
-      .filter(size(col("ts")) >= 2)
-      .select(col(groupCol), explode(bigramPairs(col("ts"))).as("pp"))
-      .select(col(groupCol),
-        concat_ws(" ", col("pp.w1"), col("pp.w2")).as("term"))
-    val sk = kmvSketch(terms, groupCol, "term", k)
-      .transform(Checkpoints.trackedEager) // both returned slices read it
-    kmvOverlap(sk.filter(col(groupCol) === groupA),
-      sk.filter(col(groupCol) === groupB), k)
-  }
+      groupA: String, groupB: String, k: Int = 256): DataFrame =
+    overlapOf(kmvBigramSetAlgebra(df, groupCol, textCol, groupA, groupB, k))
 
-  /** [[kmvBigramOverlap]]'s slice construction feeding [[kmvSetAlgebra]]:
-    * union/intersection AND both difference estimates between two corpus
-    * slices' distinct-bigram sets, from two k-row sketches. */
+  /** The bigram slices and sketch behind [[kmvBigramOverlap]], fed to
+    * [[kmvSetAlgebra]]: union/intersection AND both difference estimates
+    * between two corpus slices' distinct-bigram sets, from two k-row
+    * sketches. */
   def kmvBigramSetAlgebra(df: DataFrame, groupCol: String, textCol: String,
       groupA: String, groupB: String, k: Int = 256): DataFrame = {
     val terms = df

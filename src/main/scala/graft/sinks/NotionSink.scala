@@ -20,9 +20,10 @@ import graft.sources.bangumi.{RateLimiter, Retry}
   * rate-limited writes, per-row error isolation (R4 — failed rows counted,
   * pipeline continues), and `LongAccumulator` success/error counters (A5).
   * The upsert decision (insert vs update vs skip vs soft delete) is made
-  * distributively by joining against the read-back page snapshot (S5/J4)
-  * instead of a driver-side dict, so a sync writes only the pages whose
-  * properties or active flag change.
+  * distributively by one full outer join of the frame with the read-back
+  * page snapshot (S5/J4/I3) instead of a driver-side dict, so a sync
+  * writes only the pages whose properties or active flag change. The
+  * snapshot itself is still built on the driver by `existingPages()`.
   */
 object NotionSink {
 
@@ -118,12 +119,16 @@ object NotionSink {
 
   /** Merge-write `df` (keyed by `keyCol`) into the sink: new keys insert,
     * existing keys whose page differs update, keys present only in the
-    * sink soft-delete. A row is skipped iff its page is active and holds
+    * sink soft-delete. One full outer join of the frame with the read-back
+    * snapshot classifies every row, and one `foreachPartition` sends each
+    * down its branch, so a mass-deletion sync stays distributed like the
+    * insert/update lanes. A row is skipped iff its page is active and holds
     * every non-null formatted property already; an inactive page, or one
     * whose state the transport cannot read back, is updated with
     * `is_active = true`, so a re-added key comes back. A page that is
-    * already inactive is not soft-deleted again. `minIntervalMs` paces
-    * requests per partition (R2: the reference's API budget is ~3 req/s).
+    * already inactive is not soft-deleted again. A frame row with a null
+    * key fails and counts one error. `minIntervalMs` paces requests per
+    * partition (R2: the reference's API budget is ~3 req/s).
     */
   def upsert(
       df: DataFrame,
@@ -143,10 +148,8 @@ object NotionSink {
       case f if f.dataType.isInstanceOf[NumericType] => f.name
     }.toSet
 
-    // S5/J4: sink snapshot is small relative to the frame — broadcast it.
-    val existing = api.existingPages()
     val existingDf = spark.createDataFrame(
-      existing.toSeq.map { case (k, p) =>
+      api.existingPages().toSeq.map { case (k, p) =>
         Row(k, p.pageId, p.properties.orNull, p.active)
       }.asJava,
       StructType(Seq(StructField("__key", LongType),
@@ -156,76 +159,51 @@ object NotionSink {
 
     val okAcc = spark.sparkContext.longAccumulator("notion.ok")
     val updAcc = spark.sparkContext.longAccumulator("notion.updated")
+    val delAcc = spark.sparkContext.longAccumulator("notion.deleted")
     val sameAcc = spark.sparkContext.longAccumulator("notion.unchanged")
     val errAcc = spark.sparkContext.longAccumulator("notion.errors")
-    val matchedAcc = spark.sparkContext.collectionAccumulator[Long]("notion.matched")
 
-    val joined =
-      df.join(broadcast(existingDf), col(keyCol) === col("__key"), "left_outer")
-    val joinedKeyIdx = joined.schema.fieldIndex("__key")
+    // S5/J4 + I3: frame ⟗ snapshot; null keys never match, so a row with
+    // `__key` set and a null frame key comes from the snapshot alone
+    val joined = df.join(existingDf, col(keyCol) === col("__key"), "full_outer")
+    val snapKeyIdx = joined.schema.fieldIndex("__key")
     val pageIdIdx = joined.schema.fieldIndex("__page_id")
     val propsIdx = joined.schema.fieldIndex("__props")
     val activeIdx = joined.schema.fieldIndex("__active")
-    joined
-      .foreachPartition { rows: Iterator[Row] =>
-        val limiter = new RateLimiter(minIntervalMs)
-        rows.foreach { row =>
+    joined.foreachPartition { rows: Iterator[Row] =>
+      val limiter = new RateLimiter(minIntervalMs)
+      // R4: retry, then count the failure and continue
+      def send(acc: LongAccumulator)(request: => Unit): Unit =
+        try {
+          limiter.acquire()
+          Retry.withBackoff(3, 100L)(request)
+          acc.add(1)
+        } catch { case _: Exception => errAcc.add(1) }
+      rows.foreach { row =>
+        val known = !row.isNullAt(propsIdx)
+        val active = !row.isNullAt(activeIdx) && row.getBoolean(activeIdx)
+        if (row.isNullAt(keyIdx) && !row.isNullAt(snapKeyIdx)) {
+          // snapshot only: the frame lacks the key
+          if (active) send(delAcc)(api.softDelete(row.getString(pageIdIdx)))
+        } else if (row.isNullAt(snapKeyIdx)) {
+          // no page → insert (a null frame key fails here). An unset
+          // checkbox reads back false on the real API, so a new page
+          // carries its flag, or the next sync re-activates it
           val props = formatProperties(row, schema)
-          val known = !row.isNullAt(propsIdx)
-          val active = !row.isNullAt(activeIdx) && row.getBoolean(activeIdx)
-          if (!row.isNullAt(joinedKeyIdx)) matchedAcc.add(row.getLong(joinedKeyIdx))
-          try {
-            if (row.isNullAt(joinedKeyIdx)) { // no __key → insert
-              // an unset checkbox reads back false on the real API, so a
-              // new page carries its flag, or the next sync re-activates it
-              limiter.acquire()
-              Retry.withBackoff(3, 100L)(api.insert(row.getLong(keyIdx),
-                props + ("is_active" -> "true")))
-              okAcc.add(1)
-            } else if (active && known &&
-                holds(props, row.getMap[String, String](propsIdx), numeric)) {
-              sameAcc.add(1) // the PATCH would change nothing
-            } else {
-              val patch = if (active && known) props
-                else props + ("is_active" -> "true")
-              limiter.acquire()
-              Retry.withBackoff(3, 100L)(
-                api.update(row.getString(pageIdIdx), patch))
-              updAcc.add(1)
-            }
-          } catch {
-            case _: Exception => errAcc.add(1) // R4: log-and-continue
-          }
+          send(okAcc)(api.insert(row.getLong(keyIdx),
+            props + ("is_active" -> "true")))
+        } else {
+          val props = formatProperties(row, schema)
+          if (active && known &&
+              holds(props, row.getMap[String, String](propsIdx), numeric))
+            sameAcc.add(1) // the PATCH would change nothing
+          else send(updAcc)(api.update(row.getString(pageIdIdx),
+            if (active && known) props else props + ("is_active" -> "true")))
         }
       }
-
-    // I3: soft-delete the active sink pages whose key the frame lacks. The
-    // pass above matched every frame key the sink has, so the delete set
-    // needs no second scan of the frame; the PATCH loop runs in
-    // foreachPartition like the insert/update lanes, so a mass-deletion
-    // sync stays distributed. Same R4 envelope: retry, then
-    // count-and-continue.
-    val matched = matchedAcc.value.asScala.toSet
-    val gone = existing.collect {
-      case (k, p) if p.active && !matched(k) => p.pageId
-    }.toSeq
-    val delAcc = spark.sparkContext.longAccumulator("notion.deleted")
-    val delErrAcc = spark.sparkContext.longAccumulator("notion.deleteErrors")
-    if (gone.nonEmpty)
-      spark.sparkContext
-        .parallelize(gone, math.min(gone.size, spark.sparkContext.defaultParallelism))
-        .foreachPartition { ids =>
-          val limiter = new RateLimiter(minIntervalMs)
-          ids.foreach { id =>
-            limiter.acquire()
-            try {
-              Retry.withBackoff(3, 100L)(api.softDelete(id))
-              delAcc.add(1)
-            } catch { case _: Exception => delErrAcc.add(1) }
-          }
-        }
-    WriteReport(okAcc.value, updAcc.value, delAcc.value,
-      errAcc.value + delErrAcc.value, sameAcc.value)
+    }
+    WriteReport(okAcc.value, updAcc.value, delAcc.value, errAcc.value,
+      sameAcc.value)
   }
 
   object InMemoryNotionApi {

@@ -45,8 +45,8 @@ class NotionSinkSpec extends AnyFunSuite with SparkSpec {
     assert(byKey(3L)._3 === false) // tombstoned, not removed
   }
 
-  test("second sync: changed keys update, unchanged keys skip, missing keys soft-delete") {
-    val api = new InMemoryNotionApi("t-upsert")
+  private def changedUnchangedMissing(storeId: String): Unit = {
+    val api = new InMemoryNotionApi(storeId)
     NotionSink.upsert(frame((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)),
       "subject_id", api)
     val report = NotionSink.upsert(frame((1L, "a", 1.0), (2L, "b2", 5.0)),
@@ -55,6 +55,34 @@ class NotionSinkSpec extends AnyFunSuite with SparkSpec {
     val byKey = api.pages.asScala.values.map(p => p._1 -> p).toMap
     assert(byKey(2L)._2("name_cn") === "b2")
     assert(byKey(3L)._3 === false) // tombstoned, not removed
+  }
+
+  test("second sync: changed keys update, unchanged keys skip, missing keys soft-delete") {
+    changedUnchangedMissing("t-upsert")
+  }
+
+  test("the same sync with broadcasting disabled gives the same report") {
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      changedUnchangedMissing("t-upsert-no-bc")
+    }
+  }
+
+  test("a null-key frame row fails once and is not taken for a snapshot-only page") {
+    val api = new InMemoryNotionApi("t-null-key")
+    NotionSink.upsert(frame((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)),
+      "subject_id", api)
+    val withNull = Seq[(Option[Long], String, Double)](
+      (Some(1L), "a", 1.0), (Some(2L), "b2", 2.0), (None, "orphan", 0.0),
+      (Some(4L), "d", 4.0)).toDF("subject_id", "name_cn", "score")
+    // key 3 is on the sink only; the null-key row matches no page
+    assert(NotionSink.upsert(withNull, "subject_id", api) ===
+      NotionSink.WriteReport(1, 1, 1, 1, 1))
+    val byKey = api.pages.asScala.values.groupBy(_._1)
+    assert(byKey.keySet === Set(1L, 2L, 3L, 4L))
+    assert(byKey.values.forall(_.size === 1))
+    assert(byKey(3L).head._3 === false)
+    assert(byKey.removed(3L).values.forall(_.head._3))
+    assert(byKey(2L).head._2("name_cn") === "b2")
   }
 
   test("per-row failures are isolated and counted (R4)") {
