@@ -81,7 +81,6 @@ object Bench {
       .config("spark.sql.codegen.cache.maxEntries",
         sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Warm the file listing / parquet reader / codegen paths once per table
     // so per-query numbers measure the query, not first-touch JVM costs.
     Tables.names.foreach { t =>

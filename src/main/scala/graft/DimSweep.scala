@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Similarity
+import graft.operators.{Checkpoints, Similarity}
 
 /** Dimension-scaling sweep (dev tool, r14 verdict task 3): every
   * oracle-gated vector lane runs at the fixture's dim = 64, but
@@ -34,7 +34,6 @@ object DimSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val base = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
@@ -52,13 +51,6 @@ object DimSweep {
       val t0 = System.nanoTime()
       body.write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
-    }
-
-    def quiesce(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
     }
 
     // r17 (verdict task 2): driver-side TRAINING cost at production k·d —
@@ -86,7 +78,7 @@ object DimSweep {
         val m = math.min(run(), run())
         tout(s"train_k${k}_d$d") = m
         System.err.println(f"[dimsweep] train_k${k}_d$d%-16s $m%.2f s")
-        quiesce()
+        Checkpoints.quiesce(spark)
       }
       val tcells = tout.map { case (k, v) =>
         s""""$k":${String.format(java.util.Locale.ROOT, "%.3f",
@@ -139,7 +131,7 @@ object DimSweep {
         }
         run() // warm
         val m = math.min(run(), run())
-        quiesce()
+        Checkpoints.quiesce(spark)
         s""""p$p":${String.format(java.util.Locale.ROOT, "%.3f",
           Double.box(m))}"""
       }
@@ -180,7 +172,7 @@ object DimSweep {
       cell("ivfpq") {
         Similarity.ivfPqTopK(ed, q, "vec_id", "embedding", 10, m = 8)
       }
-      quiesce()
+      Checkpoints.quiesce(spark)
     }
     val cells = out.map { case (k, v) =>
       s""""$k":${String.format(java.util.Locale.ROOT, "%.3f",

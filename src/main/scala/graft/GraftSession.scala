@@ -15,7 +15,9 @@ object GraftSession {
 
   /** `local[cpus]` with one shuffle partition per core, UTC session time,
     * nanosecond parquet timestamps read as longs (normalized by
-    * [[Tables.normalizeEventTs]]) and no UI. */
+    * [[Tables.normalizeEventTs]]), no UI, WARN logging, and graft's SQL
+    * functions installed by [[functions.GraftExtensions]] in this session
+    * and every `newSession()` of it. */
   def builder(cpus: Int = GraftSession.cpus): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
@@ -23,4 +25,6 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.log.level", "WARN")
+      .config("spark.sql.extensions", classOf[functions.GraftExtensions].getName)
 }

@@ -14,7 +14,6 @@ object MediaDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/media_dump")
     val spark = GraftSession.builder(4).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // the qb39 lane uses syntheticMedia(200); qb40 uses syntheticMedia(60),
     // an exact prefix of the same generation — one dump serves both
     operators.Multimodal.syntheticMedia(spark, 200)

@@ -8,7 +8,6 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val out = sys.env.getOrElse("SPARK_GRAFT_PLANS_OUT", "/root/repo/PLANS.md")
     val spark = GraftSession.builder(8).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val names = Seq("q04_filter_project", "q07_nation_revenue",
       "q01_pricing_summary", "q31_cosine_topk", "q26_jaccard_pairs",
       "q09_top5_per_group", "q52_stratified_sample", "q56_sequence_packing",

@@ -36,24 +36,15 @@ object SparkEntry {
     Tables.normalizeEventTs(raw)
   }
 
-  private def rmTree(dir: String): Unit = {
-    val root = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-  }
-
   /** Temp dir that is removed at JVM exit. Query lambdas that WRITE (q78,
     * q82, the streaming sinks) return a frame reading their output lazily,
     * so the dir must outlive the lambda — but never the process: without
     * the exit hook, repeated bench sweeps accumulate sf-sized garbage in
     * /tmp (round 7 left 27 dirs / 33 MB behind). */
   private def scratchDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toString
-    Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(d)))
-    d
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    Runtime.getRuntime.addShutdownHook(new Thread(() => sinks.JdbcLoad.rmTree(d)))
+    d.toString
   }
 
   /** Run a streaming DataFrame to completion (append mode, parquet file
@@ -127,16 +118,16 @@ object SparkEntry {
 
   private def streamToParquet(s: SparkSession, df: DataFrame): DataFrame = {
     val outDir = scratchDir("graft_stream_out")
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_stream_ck").toString
+    val ckDir = java.nio.file.Files.createTempDirectory("graft_stream_ck")
     withStreamSession(s) {
       try {
         val query = df.writeStream.outputMode("append")
           .format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckDir)
+          .option("checkpointLocation", ckDir.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         query.awaitTermination()
-      } finally rmTree(ckDir) // a failed stream must not leak the checkpoint
+      } finally sinks.JdbcLoad.rmTree(ckDir) // a failed stream must not leak the checkpoint
     }
     s.read.parquet(outDir)
   }
@@ -148,16 +139,16 @@ object SparkEntry {
     * sketch contract (d×w counters regardless of stream length). */
   private def streamToMemoryComplete(s: SparkSession, df: DataFrame): DataFrame = {
     val name = "graft_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_stream_ck").toString
+    val ckDir = java.nio.file.Files.createTempDirectory("graft_stream_ck")
     withStreamSession(s) {
       try {
         val query = df.writeStream.outputMode("complete")
           .format("memory").queryName(name)
-          .option("checkpointLocation", ckDir)
+          .option("checkpointLocation", ckDir.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         query.awaitTermination()
-      } finally rmTree(ckDir) // a failed stream must not leak the checkpoint
+      } finally sinks.JdbcLoad.rmTree(ckDir) // a failed stream must not leak the checkpoint
     }
     s.table(name)
   }
@@ -988,7 +979,6 @@ object SparkEntry {
     // combining acute U+0301) makes every row exercise every pass — the
     // synthetic corpus is otherwise pure ASCII, which NFC fast-paths.
     "q103_unicode_clean" -> ((s, dir) => {
-      functions.GraftFunctions.register(s)
       val dirty = concat(col("text"), lit("  x\u0001e\u0301 "))
       T(s, dir, "documents").select(
         col("doc_id"),
@@ -1028,7 +1018,6 @@ object SparkEntry {
     // &amp; last), finished with the q103 normalizeText canonicalization —
     // the full crawl stage-0 chain, one scan-stage projection.
     "q107_html_strip" -> ((s, dir) => {
-      functions.GraftFunctions.register(s)
       val page = concat(
         lit("<html><head><script type=\"text/javascript\">var x = 1 < 2;" +
           "</script><style>p { color: red }</style></head><body><p id=\"c\">"),
@@ -2067,7 +2056,6 @@ object SparkEntry {
     // survivors). The %7 syndicated line dedups across docs, %17/%19
     // pages die on the lorem/brace page rules, odd pages keep 3 lines.
     "q120_crawl_pipeline" -> ((s, dir) => {
-      functions.GraftFunctions.register(s)
       val words = split(col("text"), " ")
       def ws(a: Int, n: Int) = array_join(slice(words, a, n), " ")
       val lines = array(
@@ -2520,7 +2508,6 @@ object SparkEntry {
     // Content-defined chunking dedup: shared rolling-hash chunks across
     // documents (shift-resistant partial-overlap detection).
     "q39_rolling_chunks" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       T(s, dir, "documents")
         .select(col("doc_id"),
           explode(graft.functions.GraftFunctions.rolling_chunks(col("text")))
@@ -2564,7 +2551,6 @@ object SparkEntry {
     // S1–S3/R1–R3: DSv2 REST connector → transform layer, end to end
     // (category-partitioned scan with enum pushdown + count-probe pruning).
     "qb38_bangumi_source" -> ((s, _) => {
-      graft.functions.GraftFunctions.register(s)
       val src = s.read
         .format(classOf[sources.bangumi.BangumiTableProvider].getName)
         .option("client", "fixture").load()

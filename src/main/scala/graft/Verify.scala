@@ -6,7 +6,6 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = GraftSession.builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // dev-only subset filter (comma-separated name substrings); the driver
     // never sets it, so its runs always cover every query

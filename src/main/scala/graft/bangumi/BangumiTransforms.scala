@@ -21,7 +21,8 @@ object BangumiTransforms {
     * is pulled out as raw JSON and flattened by the custom
     * `infobox_to_map` expression (F1).
     *
-    * Callers must `GraftFunctions.register(spark)` once per session.
+    * A [[graft.GraftSession]] session has the function; any other session
+    * calls `register` (see [[graft.functions.GraftFunctions]]) once.
     */
   def parseItems(lines: DataFrame): DataFrame =
     lines

@@ -22,8 +22,6 @@ object Fixtures {
   def itemLines(spark: SparkSession): DataFrame =
     spark.read.text(itemsPath.toString)
 
-  def items(spark: SparkSession): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
+  def items(spark: SparkSession): DataFrame =
     BangumiTransforms.parseItems(itemLines(spark))
-  }
 }

@@ -4,11 +4,13 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** Session-extension registration for graft's custom expressions, so a
-  * cluster can enable them declaratively:
-  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`
-  * (equivalent to calling [[GraftFunctions.register]] per session; both
-  * read [[GraftFunctions.table]]).
+/** Session-extension registration for graft's custom expressions:
+  * `spark.sql.extensions=graft.functions.GraftExtensions` installs every
+  * [[GraftFunctions.table]] function in the session and in each of its
+  * `newSession()`s. [[graft.GraftSession]] sets it, so every graft main
+  * and test session has the functions; a cluster enables them with
+  * `--conf`. A session built without it calls `register` (see
+  * [[GraftFunctions]]) once.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =

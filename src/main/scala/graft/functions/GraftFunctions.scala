@@ -7,17 +7,21 @@ import org.apache.spark.sql.functions.call_function
 
 /** Registration + Column wrappers for graft's custom Catalyst expressions.
   *
-  * Registered through the session's `FunctionRegistry`, so the functions are
+  * The functions live in the session's `FunctionRegistry`, so they are
   * usable from SQL text as well as the DataFrame API (and the Column wrapper
-  * avoids depending on any non-public Column constructor).
+  * avoids depending on any non-public Column constructor). A session built
+  * by [[graft.GraftSession]] has them; any other session calls [[register]]
+  * once. A session without them fails at analysis with Spark's
+  * unresolved-routine error.
   */
 object GraftFunctions {
 
   /** Every graft SQL function: name, the expression class it builds
     * (what `DESCRIBE FUNCTION` reports), and the builder over the call's
-    * argument expressions. The one list both entry paths read —
-    * [[register]] (per session) and [[GraftExtensions]]
-    * (`spark.sql.extensions`). */
+    * argument expressions. The one list both entry paths read:
+    * [[GraftExtensions]] (`spark.sql.extensions`, which
+    * [[graft.GraftSession]] sets) and [[register]] (once, on a session
+    * built any other way). */
   val table: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     ("infobox_to_map", classOf[InfoboxToMap], exprs => InfoboxToMap(exprs.head)),
     ("rolling_chunks", classOf[RollingHashChunks], exprs =>
@@ -46,6 +50,8 @@ object GraftFunctions {
     ("graft_bloom_might_contain", classOf[BloomFilterMightContain], exprs =>
       BloomFilterMightContain(exprs(0), exprs(1))))
 
+  /** Install every [[table]] function on a session that was not built by
+    * [[graft.GraftSession]]; call it once per such session. */
   def register(spark: SparkSession): Unit =
     table.foreach { case (name, _, builder) =>
       spark.sessionState.functionRegistry
@@ -89,27 +95,19 @@ object GraftFunctions {
   /** Codegen'd dot product Σ a(i)·b(i) over two array<double> columns —
     * the same left-to-right IEEE fold as `aggregate(zip_with(a, b, _*_),
     * 0.0, _+_)`, minus the interpreted-lambda and zip-materialization
-    * cost. Self-registers: pure Column helpers have no DataFrame to hang
-    * a registration on. */
-  def graft_dot(a: Column, b: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    call_function("graft_dot", a, b)
-  }
+    * cost. */
+  def graft_dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
   /** 2-D Hilbert curve index of quantized non-negative long cells (the
     * xy2d rotate-and-flip loop, codegen'd). */
-  def graft_hilbert2d(x: Column, y: Column, bits: Int): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
+  def graft_hilbert2d(x: Column, y: Column, bits: Int): Column =
     call_function("graft_hilbert2d", x, y,
       org.apache.spark.sql.functions.lit(bits))
-  }
 
   /** Codegen'd squared euclidean distance Σ (a(i)−b(i))² (see
     * [[graft_dot]] for the fold contract). */
-  def graft_sqdist(a: Column, b: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
+  def graft_sqdist(a: Column, b: Column): Column =
     call_function("graft_sqdist", a, b)
-  }
 
   /** Unicode NFC canonical composition (codegen'd; ASCII rows are an
     * allocation-free identity). */

@@ -93,8 +93,6 @@ object Dedup {
       textCol: String,
       estimatedDeltaFps: Long = 0L,
       numBits: Long = 0L): DataFrame = {
-    val spark = delta.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.GraftFunctions.{bloom_agg, bloom_might_contain}
     // within-delta winners (min id per fingerprint); materialized because
     // it feeds two consumers (the sketch action and the returned frame) —
@@ -387,7 +385,6 @@ object Dedup {
       textCol: String,
       n: Int,
       maxShingleDocFreq: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val hashed = df.select(col(idCol),
         explode(graft.functions.GraftFunctions.shingle_hashes(
           TextAnalysis.tokens(col(textCol)), n)).as("shingle"))
@@ -702,8 +699,6 @@ object Dedup {
       n: Int,
       estimatedBenchShingles: Long = 1L << 20,
       numBits: Long = 1L << 23): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.GraftFunctions.{bloom_agg, bloom_might_contain}
     val benchShingles = shingleRows(bench, idCol, textCol, n)
       .select("shingle").distinct()
@@ -743,7 +738,6 @@ object Dedup {
       idCol: String,
       vecCol: String,
       threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val c = corpus.select(col(idCol),
       Similarity.asDouble(col(vecCol)).as("__v"))
     val b = bench.select(Similarity.asDouble(col(vecCol)).as("__bv"))
@@ -776,7 +770,6 @@ object Dedup {
       textCol: String,
       n: Int,
       numHashes: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val sig = df.select(col(idCol), graft.functions.GraftFunctions.minhash_sig(
         TextAnalysis.tokens(col(textCol)), n, numHashes).as("__sig"))
       .filter(col("__sig").isNotNull)
@@ -1091,7 +1084,6 @@ object Dedup {
     * in SQL — shared by the sampled audit variants below. */
   private[graft] def kminDocSample(df: DataFrame, idCol: String, k: Int): DataFrame = {
     require(k >= 64, "a sample below 64 docs estimates nothing")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val hv = conv(substring(md5(col(idCol).cast("string")), 1, 13), 16, 10)
       .cast("long")
     val hashed = df.withColumn("__hv", hv)
@@ -1189,7 +1181,6 @@ object Dedup {
     * equivalence is spec-pinned on top of the oracle gate).
     */
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol),
       graft.functions.GraftFunctions
         .simhash64(TextAnalysis.tokens(col(textCol))).as("simhash"))

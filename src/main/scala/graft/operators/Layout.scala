@@ -96,7 +96,6 @@ object Layout {
       xCol: String,
       yCol: String,
       bits: Int = 16): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val cols = Seq(xCol, yCol)
     val aggs = cols.flatMap(c =>
       Seq(min(col(c)).cast("long"), max(col(c)).cast("long")))

@@ -644,7 +644,6 @@ object Sampling {
     require(k >= 64, "k below 64 estimates nothing")
     require(probs.nonEmpty && probs.forall(p => p >= 0.0 && p <= 1.0),
       "probs must lie in [0, 1]")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val hv = conv(substring(md5(col(idCol).cast("string")), 1, 13), 16, 10)
       .cast("long")
     val hashed = df.select(col(idCol).as("__id"), valueCol.as("__x"),
@@ -699,7 +698,6 @@ object Sampling {
     require(k >= 16, "k below 16 estimates nothing")
     require(probs.nonEmpty && probs.forall(p => p >= 0.0 && p <= 1.0),
       "probs must lie in [0, 1]")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val hv = conv(substring(md5(col(idCol).cast("string")), 1, 13), 16, 10)
       .cast("long")
     val hashed = df.select(col(groupCol), col(idCol).as("__id"),
@@ -746,7 +744,6 @@ object Sampling {
       valueCol: Column,
       k: Int): DataFrame = {
     require(k >= 16, "k below 16 estimates nothing")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val hv = conv(substring(md5(col(idCol).cast("string")), 1, 13), 16, 10)
       .cast("long")
     df.select(col(groupCol), hv.as("__h"), valueCol.cast("long").as("__v"))
@@ -804,7 +801,6 @@ object Sampling {
       coarseName: String,
       k: Int): DataFrame = {
     require(k >= 16, "k below 16 estimates nothing")
-    graft.functions.GraftFunctions.register(fine.sparkSession)
     val totals = fine.groupBy(coarseExpr.as(coarseName))
       .agg(sum(col("n_total")).as("n_total"))
     val merged = fine

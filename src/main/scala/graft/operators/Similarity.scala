@@ -51,13 +51,6 @@ object Similarity {
     when(d === 0.0, lit(null).cast("double")).otherwise(dot(a, b) / d)
   }
 
-  /** Register graft's codegen expressions on the session that will ANALYZE
-    * the plan — [[dot]]/[[norm]]/[[cosine]] resolve `graft_dot` through the
-    * session FunctionRegistry, and a fresh session (`newSession()`, a serve
-    * job) does not inherit another session's temp functions. Idempotent. */
-  private def ensureFns(s: org.apache.spark.sql.SparkSession): Unit =
-    graft.functions.GraftFunctions.register(s)
-
   /** Exact top-k cosine neighbors for each query vector.
     *
     * @param corpus  (idCol, vecCol) table — the big side
@@ -69,7 +62,6 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int): DataFrame = {
-    ensureFns(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
     val q = queries.select(col(idCol).as("q_id"), asDouble(col(vecCol)).as("qv"))
     val scored = c.join(broadcast(q), col("id") =!= col("q_id"))
@@ -122,7 +114,6 @@ object Similarity {
       dim: Int = 64,
       seed: Long = 42L,
       nTables: Int = 1): DataFrame = {
-    ensureFns(corpus.sparkSession)
     require(nTables >= 1, "nTables must be >= 1")
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
     val q = queries.select(col(idCol).as("q_id"), asDouble(col(vecCol)).as("qv"))
@@ -173,7 +164,6 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int): DataFrame = {
-    ensureFns(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
     val q = queries.select(col(idCol).as("q_id"), asDouble(col(vecCol)).as("qv"))
     val scored = c.join(broadcast(q), col("id") =!= col("q_id"))
@@ -191,7 +181,6 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int): DataFrame = {
-    ensureFns(corpus.sparkSession)
     val spark = corpus.sparkSession
     import spark.implicits._
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
@@ -235,7 +224,6 @@ object Similarity {
       vecCol: String,
       labelCol: String,
       k: Int): DataFrame = {
-    ensureFns(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"),
       col(labelCol).as("neg_label"))
     val q = queries.select(col(idCol).as("q_id"), asDouble(col(vecCol)).as("qv"),
@@ -278,7 +266,6 @@ object Similarity {
       vecCol: String,
       labelCol: String,
       sideExpr: Column): DataFrame = {
-    ensureFns(df.sparkSession)
     val dims = df.select(col(labelCol).as("label"), sideExpr.as("in_p"),
       posexplode(asDouble(col(vecCol))).as(Seq("dim", "x")))
     val means = dims.groupBy(col("label"), col("dim"))
@@ -537,7 +524,6 @@ object Similarity {
       k: Int,
       sampleSize: Int = 64,
       iters: Int = 2): Array[(Int, Seq[Double])] = {
-    ensureFns(corpus.sparkSession)
     val samp = sortedSample(corpus, idCol, vecCol, sampleSize)
     require(samp.nonEmpty, "kmeansCentroids: empty corpus")
     lloyd(samp, k, iters, isCos = true, Some(corpus.sparkSession))
@@ -706,7 +692,6 @@ object Similarity {
       k: Int,
       nCentroids: Int = 8,
       nProbe: Int = 2): DataFrame = {
-    ensureFns(corpus.sparkSession)
     val spark = corpus.sparkSession
     import spark.implicits._
     val c = guardedProjection(
@@ -747,7 +732,6 @@ object Similarity {
       k: Int,
       sampleSize: Int = 64,
       iters: Int = 2): Array[Array[(Int, Seq[Double])]] = {
-    ensureFns(corpus.sparkSession)
     val samp = sortedSample(corpus, idCol, vecCol, sampleSize)
     require(samp.nonEmpty, "pqCodebooks: empty corpus")
     val dim = samp.head.length
@@ -832,7 +816,6 @@ object Similarity {
       m: Int = 8,
       codebookSize: Int = 8,
       sampleSize: Int = 64): DataFrame = {
-    ensureFns(corpus.sparkSession)
     val books = pqCodebooks(corpus, idCol, vecCol, m, codebookSize, sampleSize)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
     val codes = pqEncode(c, books, Nil)
@@ -861,7 +844,6 @@ object Similarity {
       vecCol: String,
       candidates: DataFrame,
       k: Int): DataFrame = {
-    ensureFns(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
     val cand = candidates.select(col("q_id"), col("id"))
     val q = queries.select(col(idCol).as("q_id"), asDouble(col(vecCol)).as("qv"))
@@ -888,7 +870,6 @@ object Similarity {
       codebookSize: Int = 8,
       candidateFactor: Int = 4,
       sampleSize: Int = 64): DataFrame = {
-    ensureFns(corpus.sparkSession)
     require(candidateFactor >= 1, "candidateFactor must be >= 1")
     val cand = pqTopK(corpus, queries, idCol, vecCol, k * candidateFactor,
       m, codebookSize, sampleSize)
@@ -920,7 +901,6 @@ object Similarity {
       m: Int = 8,
       codebookSize: Int = 8,
       sampleSize: Int = 64): DataFrame = {
-    ensureFns(corpus.sparkSession)
     val spark = corpus.sparkSession
     import spark.implicits._
     val c = guardedProjection(
@@ -1098,7 +1078,6 @@ object Similarity {
       m: Int = 8,
       codebookSize: Int = 8,
       sampleSize: Int = 64): Unit = {
-    ensureFns(corpus.sparkSession)
     val spark = corpus.sparkSession
     import spark.implicits._
     val c = guardedProjection(
@@ -1155,7 +1134,6 @@ object Similarity {
       vecCol: String,
       k: Int,
       nProbe: Int = 2): DataFrame = {
-    ensureFns(spark)
     import spark.implicits._
     val centroids = readCentroids(spark, indexDir)
     val books = readCodebooks(spark, indexDir)
@@ -1213,7 +1191,6 @@ object Similarity {
       delta: DataFrame,
       idCol: String,
       vecCol: String): Unit = {
-    ensureFns(spark)
     val centroids = readCentroids(spark, indexDir)
     val books = readCodebooks(spark, indexDir)
     require(centroids.nonEmpty && books.nonEmpty,
@@ -1244,7 +1221,6 @@ object Similarity {
       k: Int,
       nProbe: Int = 2,
       candidateFactor: Int = 4): DataFrame = {
-    ensureFns(spark)
     require(candidateFactor >= 1, "candidateFactor must be >= 1")
     val cand = ivfPqTopKFromIndex(spark, indexDir, queries, idCol, vecCol,
       k * candidateFactor, nProbe)
@@ -1296,7 +1272,6 @@ object Similarity {
       nCentroids: Int = 0,
       targetCellSize: Int = 64,
       maxFlatCells: Int = MaxFlatCells): DataFrame = {
-    ensureFns(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
     val assigned = autoAssignCells(c, nCentroids, targetCellSize, maxFlatCells)
       .transform(Checkpoints.trackedEager)
@@ -1536,7 +1511,6 @@ object Similarity {
       nCentroids: Int = 0,
       targetCellSize: Int = 64,
       maxFlatCells: Int = MaxFlatCells): DataFrame = {
-    ensureFns(corpus.sparkSession)
     cellNearDupPairsFrom(
       corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v")),
       threshold, nCentroids, targetCellSize, maxFlatCells)
@@ -1650,7 +1624,6 @@ object Similarity {
       nCentroids: Int = 0,
       targetCellSize: Int = 64,
       maxFlatCells: Int = MaxFlatCells): DataFrame = {
-    ensureFns(corpus.sparkSession)
     cellNearDupPairsMultiProbeFrom(
       corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v")),
       threshold, nProbe, nCentroids, targetCellSize, maxFlatCells)
@@ -1737,7 +1710,6 @@ object Similarity {
       seed: Long = 42L,
       targetBucketSize: Int = 64,
       maxPlanesPerLevel: Int = MaxAutoPlanes): Double = {
-    ensureFns(corpus.sparkSession)
     val p =
       if (nPlanes > 0) nPlanes
       else autoPlanesTwoLevel(corpus.count(), targetBucketSize,
@@ -1818,7 +1790,6 @@ object Similarity {
       maxFlatCells: Int = MaxFlatCells,
       cellProbes: Int = DefaultCellProbes,
       srpProbes: Int = DefaultSrpProbes): DataFrame = {
-    ensureFns(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
       .transform(Checkpoints.trackedEager)
     val conc = srpBucketConcentration(c, "id", "v", nPlanes, dim, seed,
@@ -1862,7 +1833,6 @@ object Similarity {
       seed: Long = 42L,
       targetBucketSize: Int = 64,
       targetCellSize: Int = 64): DataFrame = {
-    ensureFns(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
       .transform(Checkpoints.trackedEager)
     val srp = embeddingNearDupPairs(c, "id", "v", threshold, nPlanes, dim,
@@ -1923,7 +1893,6 @@ object Similarity {
       targetCellSize: Int = 64,
       cellProbes: Int = 1,
       srpProbes: Int = 1): DataFrame = {
-    ensureFns(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
       .transform(Checkpoints.trackedEager)
     val truePairs = exactCosinePairs(c, threshold)
@@ -1990,7 +1959,6 @@ object Similarity {
       targetCellSize: Int = 64,
       measureRecall: Boolean = false,
       zipfConcentration: Double = 3.0): DataFrame = {
-    ensureFns(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
       .transform(Checkpoints.trackedEager)
     val p = autoPlanesTwoLevel(c.count(), targetBucketSize, MaxAutoPlanes)
@@ -2119,7 +2087,6 @@ object Similarity {
       seed: Long = 42L,
       targetBucketSize: Int = 64,
       maxPlanesPerLevel: Int = MaxAutoPlanes): DataFrame = {
-    ensureFns(corpus.sparkSession)
     val p =
       if (nPlanes > 0) nPlanes
       else autoPlanesTwoLevel(corpus.count(), targetBucketSize,
@@ -2226,7 +2193,6 @@ object Similarity {
       seed: Long = 42L,
       targetBucketSize: Int = 64,
       maxPlanesPerLevel: Int = MaxAutoPlanes): DataFrame = {
-    ensureFns(corpus.sparkSession)
     val p =
       if (nPlanes > 0) nPlanes
       else autoPlanesTwoLevel(corpus.count(), targetBucketSize,
@@ -2262,7 +2228,6 @@ object Similarity {
       dim: Int,
       nProbes: Int,
       seed: Long = 42L): DataFrame = {
-    ensureFns(corpus.sparkSession)
     require(nProbes >= 1 && nProbes <= nPlanes + 1,
       "probes = the home bucket + at most one flip per plane")
     val planes = hyperplanes(nPlanes, dim, seed)
@@ -2321,7 +2286,6 @@ object Similarity {
       k: Int,
       rerankFactor: Int = 4,
       dim: Int = 64): DataFrame = {
-    ensureFns(corpus.sparkSession)
     val (chi, clo) = signHalves(asDouble(col(vecCol)), dim)
     val codes = corpus.select(col(idCol).as("id"),
       asDouble(col(vecCol)).as("v"), chi.as("hi"), clo.as("lo"))
@@ -2374,7 +2338,6 @@ object Similarity {
       seed: Long = 42L,
       targetBucketSize: Int = 64,
       maxPlanesPerLevel: Int = MaxAutoPlanes): DataFrame = {
-    ensureFns(corpus.sparkSession)
     val p =
       if (nPlanes > 0) nPlanes
       else autoPlanesTwoLevel(corpus.count(), targetBucketSize,
@@ -2418,7 +2381,6 @@ object Similarity {
       nQueries: Int,
       seed: Long = 42L): DataFrame = {
     require(k >= 2 && k < dim, "project DOWN: 2 <= k < dim")
-    ensureFns(df.sparkSession)
     val planes = hyperplanes(k, dim, seed)
     val invSqrtK = 1.0 / math.sqrt(k.toDouble)
     def proj(vc: Column): Column = array(planes.toIndexedSeq.map { p =>

@@ -1492,7 +1492,6 @@ object TextAnalysis {
   def kmvSketch(df: DataFrame, groupCol: String, termCol: String,
       k: Int = 256): DataFrame = {
     require(k >= 16, "k below 16 estimates nothing")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val v = conv(substring(md5(col(termCol).cast("string")), 1, 13), 16, 10)
       .cast("long")
     df.select(col(groupCol), v.as("v"))
@@ -1824,7 +1823,6 @@ object TextAnalysis {
       idCol: String,
       textCol: String,
       dim: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val agg = hashedBucketWeights(df, idCol, textCol, dim)
     val nDocs = df.agg(count(lit(1)).cast("double").as("n_docs"))
     val idf = agg.filter(col("w") =!= 0L)

@@ -289,10 +289,16 @@ object JdbcLoad {
     try {
       merged.write.mode("overwrite").parquet(stage.toString)
       overwrite(merged.sparkSession.read.parquet(stage.toString))
-    } finally {
-      val tree = Files.walk(stage)
+    } finally rmTree(stage)
+  }
+
+  /** Delete `root` and everything under it, children first; a missing
+    * root is a no-op and a failed delete throws. Closes the directory
+    * walk, which holds open handles until closed. */
+  private[graft] def rmTree(root: Path): Unit =
+    if (Files.exists(root)) {
+      val tree = Files.walk(root)
       try tree.sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
       finally tree.close()
     }
-  }
 }

@@ -311,8 +311,6 @@ object EventStreams {
       textCol: String,
       estimatedIndexFps: Long = 0L,
       numBits: Long = 0L): DataFrame = {
-    val spark = indexFps.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.GraftFunctions.{bloom_agg, bloom_might_contain}
     import org.apache.spark.sql.functions.{col, lit, xxhash64}
     // Defaults (<= 0) size the sketch from a count of the index (for a

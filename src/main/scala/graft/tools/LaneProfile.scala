@@ -30,7 +30,6 @@ object LaneProfile {
       .config("spark.ui.enabled",
         if (sys.env.contains("SPARK_GRAFT_HOLD")) "true" else "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val stages = new java.util.concurrent.atomic.AtomicInteger
     val tasks = new java.util.concurrent.atomic.AtomicInteger

@@ -26,7 +26,6 @@ object PlanSnap {
     val lanes = sys.env.getOrElse("SPARK_GRAFT_LANES", "")
       .split(",").map(_.trim).filter(_.nonEmpty)
     val spark = graft.GraftSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     lanes.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

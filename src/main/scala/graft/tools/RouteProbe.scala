@@ -19,7 +19,6 @@ object RouteProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.GraftSession.builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val docs = Tables.load(spark, sfDir, "documents")
     val emb = Tables.load(spark, sfDir, "embeddings")

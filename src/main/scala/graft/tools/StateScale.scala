@@ -18,15 +18,6 @@ import org.apache.spark.sql.functions._
   *   SPARK_GRAFT_STATE_ROWS / _KEYS / _FILES / _SHARDS to resize.
   */
 object StateScale {
-  private def rmTree(dir: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val p = Paths.get(dir)
-    if (Files.exists(p))
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => scala.util.Try(Files.delete(f)))
-  }
-
   def main(args: Array[String]): Unit = {
     val nRows = sys.env.getOrElse("SPARK_GRAFT_STATE_ROWS", "8000000").toLong
     val nKeys = sys.env.getOrElse("SPARK_GRAFT_STATE_KEYS", "6000000").toLong
@@ -35,7 +26,6 @@ object StateScale {
     val spark = graft.GraftSession.builder()
       .config("spark.sql.shuffle.partitions", shards.toString)
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     val fixture = s"/tmp/graft_state_fixture_${nRows}_$nKeys"
@@ -52,8 +42,8 @@ object StateScale {
     }
 
     def run(provider: String): (Double, Long, Long) = {
-      val ck = java.nio.file.Files.createTempDirectory("graft_state_ck").toString
-      val out = java.nio.file.Files.createTempDirectory("graft_state_out").toString
+      val ck = java.nio.file.Files.createTempDirectory("graft_state_ck")
+      val out = java.nio.file.Files.createTempDirectory("graft_state_out")
       val saved = Seq(
         "spark.sql.streaming.stateStore.providerClass",
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
@@ -74,7 +64,7 @@ object StateScale {
           .dropDuplicates("key")
           .writeStream.outputMode("append")
           .format("parquet").option("path", s"$out/data")
-          .option("checkpointLocation", ck)
+          .option("checkpointLocation", ck.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
@@ -88,8 +78,8 @@ object StateScale {
           case (k, Some(v)) => spark.conf.set(k, v)
           case (k, None)    => spark.conf.unset(k)
         }
-        rmTree(ck)
-        rmTree(out)
+        graft.sinks.JdbcLoad.rmTree(ck)
+        graft.sinks.JdbcLoad.rmTree(out)
         org.apache.spark.sql.GraftStateStoreBridge.unloadAllStateStores()
         spark.streams.resetTerminated()
         System.gc()

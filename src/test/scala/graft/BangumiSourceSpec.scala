@@ -39,7 +39,6 @@ class BangumiSourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("source output feeds the transform layer end-to-end") {
-    graft.functions.GraftFunctions.register(spark)
     val raw = BangumiTransforms.rawProjection(
       BangumiTransforms.parseItems(source().select("value")), "graft")
     assert(raw.count() === 6)

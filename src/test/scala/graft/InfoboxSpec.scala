@@ -9,7 +9,6 @@ import graft.functions.GraftFunctions
 class InfoboxSpec extends AnyFunSuite with SparkSpec {
 
   private def flatten(json: String): Map[String, String] = {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val row = Seq(json).toDF("j")
       .select(GraftFunctions.infobox_to_map($"j").as("m"))
@@ -70,7 +69,6 @@ class InfoboxSpec extends AnyFunSuite with SparkSpec {
     // fails to compile; with fallback OFF a doGenCode bug becomes a hard
     // error instead of a hidden slow path. Run through a real projection
     // (wholestage pipeline), nulls and malformed rows included.
-    GraftFunctions.register(spark)
     import spark.implicits._
     withSQLConf(
       "spark.sql.codegen.wholeStage" -> "true",

@@ -257,7 +257,6 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
 
   test("kmin_values aggregate: k smallest distinct, partial-merge invariant") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // duplicates + shuffled order + many partitions → exercises update
     // dedup, the saturated fast path, and cross-partition partial merge
     val vals = (1L to 500L).flatMap(v => Seq(v, v, 1000L - v))
@@ -459,7 +458,6 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
         assert(viaKernel.contains(9011L) && !viaKernel.contains(9001L))
       }
       // the multiset, duplicates included, and the operator's distinct set
-      GraftFunctions.register(spark)
       val multiset = docs.select($"doc_id",
         explode(GraftFunctions.shingle_hashes(TextAnalysis.tokens($"text"), n)))
       assert(hashes(multiset) === hashes(shingleHashesComposed(docs, n)), s"n=$n")
@@ -553,7 +551,6 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("rolling-hash chunks survive a prefix insertion (shift resistance)") {
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val base = Seq.fill(120)(rnd.alphanumeric.take(6).mkString).mkString(" ")
     val shifted = "INSERTED PREFIX " + base
@@ -1849,7 +1846,6 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
       .get("spark.sql.optimizer.runtime.bloomFilter.maxNumBits").toLong
     assert(GraftFunctions.bloomBitsFor(Long.MaxValue / 32) <= maxConf,
       s"bloomBitsFor ceiling exceeds Spark's cap $maxConf")
-    GraftFunctions.register(spark)
     val df = (1L to 1000L).toDF("x")
     val s = GraftFunctions.sizedBloomSketch(df,
       org.apache.spark.sql.functions.xxhash64($"x"), 1000L, 0L, "spec").get
@@ -1935,7 +1931,6 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("nfc_normalize composes marks, fast-paths ASCII, stays codegen'd") {
-    graft.functions.GraftFunctions.register(spark)
     val rows = Seq(
       (1L, "éclair"),        // decomposed → composes to é
       (2L, "éclair"),          // already precomposed → unchanged
@@ -1970,7 +1965,6 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("normalizeText: NFC + control strip + whitespace collapse + trim") {
-    graft.functions.GraftFunctions.register(spark)
     val rows = Seq(
       (1L, "  a \t\n b  "),          // runs of real whitespace collapse
       (2L, "a\u0001b\u007Fc"),       // C0/DEL controls stripped, no space
@@ -2040,7 +2034,6 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("stripHtml: block content, tags, entity decode order") {
-    graft.functions.GraftFunctions.register(spark)
     val cases = Seq(
       // script/style CONTENT vanishes (incl. a '<' inside the code),
       // case-insensitive tag match, attributes on the opening tag
@@ -3021,7 +3014,6 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
 
   test("hilbert index: a space-filling curve (bijective, unit-step), beats morton locality") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // full 8x8 grid at bits=3: the index must be a BIJECTION onto 0..63
     // and consecutive indexes must be 4-adjacent cells (|dx|+|dy| = 1) -
     // the defining Hilbert property, which Morton violates at every
@@ -3268,7 +3260,6 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
   test("VecFold codegen == HOF fold bit-for-bit, incl. null semantics") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{aggregate, zip_with, lit, expr}
-    graft.functions.GraftFunctions.register(spark)
     // adversarial doubles: denormals, huge/small magnitude mixes where
     // summation ORDER changes the result, negatives, exact binary fracs
     val rnd = new scala.util.Random(7)

@@ -20,7 +20,6 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(i.toLong)))
 
   test("infobox_to_map never throws on arbitrary input (total function)") {
-    GraftFunctions.register(spark)
     val junk = samples(Gen.asciiPrintableStr, 150) ++
       samples(Gen.alphaNumStr.map(s => s"""[{"key":"$s","value":"$s"}]"""), 50) ++
       Seq(null, "", "[]", "{}", "[null]", "[1,2]", """[{"key":null}]""",
@@ -234,7 +233,6 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
   }
 
   test("kmin_values equals sorted-distinct-take-k on arbitrary inputs") {
-    GraftFunctions.register(spark)
     // arbitrary longs (duplicates, negatives, extremes), arbitrary k,
     // arbitrary partitioning — the aggregate must always equal the
     // reference order statistic computed in plain Scala
@@ -602,7 +600,6 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
     // drift in the shared helper (tie-breaking, flip encoding, substr
     // arithmetic at the first/last plane) fails on VALUES, not shape
     import graft.operators.Similarity
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     for ((d, p, nProbes) <- Seq((3, 1, 1), (3, 1, 2), (4, 3, 2), (5, 4, 5),
         (8, 6, 4))) {

@@ -56,7 +56,6 @@ class RollingChunksSpec extends AnyFunSuite with SparkSpec {
   }
 
   private def exprChunks(texts: Seq[String], window: Int, maskBits: Int): Seq[Seq[String]] = {
-    GraftFunctions.register(spark)
     texts.toDF("t")
       .select(GraftFunctions.rolling_chunks($"t", window, maskBits).as("c"))
       .collect().toSeq.map(_.getSeq[String](0))
@@ -140,7 +139,6 @@ class RollingChunksSpec extends AnyFunSuite with SparkSpec {
   test("doGenCode compiles: results identical with codegen fallback disabled") {
     // with fallback OFF a generated-code compile error fails hard instead
     // of silently dropping to the interpreted path
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     withSQLConf(
       "spark.sql.codegen.wholeStage" -> "true",

@@ -4,11 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared local session for suites (one per JVM via getOrCreate). */
 trait SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = GraftSession.builder(4).appName("graft-test").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    GraftSession.builder(4).appName("graft-test").getOrCreate()
 
   /** Run `body` with the given SQL confs set, restoring previous values. */
   def withSQLConf[A](pairs: (String, String)*)(body: => A): A = {

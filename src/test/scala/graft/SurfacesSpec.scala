@@ -132,7 +132,6 @@ class SurfacesSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("the engine is queryable through SQL text, including custom functions") {
-    graft.functions.GraftFunctions.register(spark)
     Tables.registerAll(spark, "/root/testdata/sf0.001")
     val revenue = spark.sql(
       """SELECT n_name, round(sum(o_totalprice), 2) AS revenue
