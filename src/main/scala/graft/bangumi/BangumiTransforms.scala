@@ -22,7 +22,7 @@ object BangumiTransforms {
     * `infobox_to_map` expression (F1).
     *
     * A [[graft.GraftSession]] session has the function; any other session
-    * calls `register` (see [[graft.functions.GraftFunctions]]) once.
+    * calls `register` (see [[GraftFunctions]]) once.
     */
   def parseItems(lines: DataFrame): DataFrame =
     lines
